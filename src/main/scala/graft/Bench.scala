@@ -80,6 +80,19 @@ object Bench {
   private[graft] def force(df: org.apache.spark.sql.DataFrame): Unit =
     df.foreach(_ => ())
 
+  /** Seconds one forced run of `query` took, and what it threw, if
+    * anything: a throwing query is a failure of the run, never a valid
+    * reading.
+    */
+  private[graft] def timeRun(
+      query: => org.apache.spark.sql.DataFrame): (Double, Option[Throwable]) = {
+    val t0 = System.nanoTime()
+    val err =
+      try { force(query); None }
+      catch { case e: Throwable => Some(e) }
+    ((System.nanoTime() - t0) / 1e9, err)
+  }
+
   def main(args: Array[String]): Unit = {
     val loadStart = loadAvg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -113,12 +126,13 @@ object Bench {
     // generations so the next query starts on a clean slate — see the
     // class doc. Release sits OUTSIDE the timed window: bookkeeping,
     // not query work.
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, Throwable]
     val perQuery: Seq[(String, Seq[Double])] =
       SparkEntry.queries.toSeq.map { case (name, fn) =>
         def run(): Double = {
-          val t0 = System.nanoTime()
-          try { force(fn(spark, sfDir)) } catch { case _: Throwable => () }
-          (System.nanoTime() - t0) / 1e9
+          val (secs, err) = timeRun(fn(spark, sfDir))
+          err.foreach(failed.getOrElseUpdate(name, _))
+          secs
         }
         val base = (1 to iters).map(_ => run())
         // adaptive noise re-runs (see [[needsRerun]]): widen to 5
@@ -152,6 +166,9 @@ object Bench {
       case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] could not write BENCH.out.json: $e")
     }
+    failed.foreach { case (name, e) =>
+      System.err.println(s"[bench] $name failed: $e")
+    }
     // nothing may print after the metric line (the driver keeps a bounded
     // TAIL of combined output) — stop Spark first so late executor/stop
     // logs cannot crowd the capture window; and a stop() failure must not
@@ -175,6 +192,8 @@ object Bench {
     // per-query map, which is what the scorecard needs complete
     println(metricLine(total, prepareMs, medians, sfOf(sfDir)))
     System.out.flush()
+    // the line keeps its shape, but a run with a throwing query fails
+    if (failed.nonEmpty) sys.exit(1)
   }
 
   /** The full-fidelity sidecar record (BENCH.out.json): per-query

@@ -15,6 +15,9 @@ import graft.operators.Enrich
   * Malformed JSON yields a null struct from `from_json` and the record is
   * dropped, mirroring the reference's decode-and-reject behavior
   * (ref: forward_server.go:58-63) without failing the stream.
+  *
+  * Invariant: each parser evaluates an envelope's JSON once — its plan
+  * holds one scan of the input and one `from_json` (pinned in WireSpec).
   */
 object Wire {
 
@@ -44,18 +47,20 @@ object Wire {
       .filter(ok)
   }
 
-  private def envelope(jsonLines: DataFrame, column: String): DataFrame =
+  /** One record column per envelope row: the short (server submit-batch)
+    * and long (agent /v1/data) key spellings are both valid and parse
+    * identically, so records under either key are concatenated — neither
+    * spelling can shadow the other when a producer sends both. Malformed
+    * JSON or an envelope without either key yields an empty array and
+    * explodes to nothing; a separate null filter would be pushed below
+    * the project by Catalyst and evaluate `from_json` a second time.
+    */
+  private def records(jsonLines: DataFrame, column: String, short: String,
+      long: String): DataFrame =
     jsonLines.select(from_json(col(column), Schemas.wireBatch).as("b"))
-      .filter(col("b").isNotNull)
-
-  // short (server submit-batch) and long (agent /v1/data) key spellings
-  // are both valid envelopes; records under either key parse identically.
-  // TRUE UNION of both keys per envelope — explode of an absent (null)
-  // array emits nothing, so neither spelling can shadow the other when a
-  // producer ever sends both
-  private def records(env: DataFrame, short: String, long: String): DataFrame =
-    env.select(explode(col(s"b.$short")).as("r"))
-      .unionByName(env.select(explode(col(s"b.$long")).as("r")))
+      .select(explode(concat(
+        coalesce(col(s"b.$short"), array()),
+        coalesce(col(s"b.$long"), array()))).as("r"))
 
   /** Metric stream: only `gauge`/`counter` survive — any other type is
     * dropped, the *intended* semantics of the reference's script decode
@@ -63,7 +68,7 @@ object Wire {
     * nil-deref, SURVEY.md §7.4).
     */
   def metrics(jsonLines: DataFrame, column: String = "value"): DataFrame =
-    records(envelope(jsonLines, column), "m", "metrics")
+    records(jsonLines, column, "m", "metrics")
       .select(
         parseTime(col("r.t")).as("time"),
         col("r.m").as("type"),
@@ -76,7 +81,7 @@ object Wire {
 
   /** Log stream; absent level defaults to "" (ref: common/log.go:21). */
   def logs(jsonLines: DataFrame, column: String = "value"): DataFrame =
-    records(envelope(jsonLines, column), "l", "logs")
+    records(jsonLines, column, "l", "logs")
       .select(
         parseTime(col("r.t")).as("time"),
         coalesce(col("r.h"), lit("")).as("host"),
@@ -88,7 +93,7 @@ object Wire {
 
   /** Event stream (ref: common/event.go:8-14). */
   def events(jsonLines: DataFrame, column: String = "value"): DataFrame =
-    records(envelope(jsonLines, column), "e", "events")
+    records(jsonLines, column, "e", "events")
       .select(
         parseTime(col("r.t")).as("time"),
         coalesce(col("r.h"), lit("")).as("host"),
@@ -114,21 +119,24 @@ object ScriptResults {
   private def ts(unixSecs: Column, collectedAt: Column): Column =
     coalesce(timestamp_seconds(unixSecs), collectedAt)
 
-  private def docs(jsonLines: DataFrame, column: String): DataFrame =
+  /** Singular field (when present) followed by the plural array, as one
+    * exploded record column: one `from_json` and one `explode` per
+    * document, like [[Wire]]'s envelopes. A malformed document or one
+    * carrying neither form explodes to nothing.
+    */
+  private def forms(jsonLines: DataFrame, column: String, singular: String,
+      plural: String): DataFrame = {
+    val one = col(s"r.$singular")
     jsonLines.select(from_json(col(column), Schemas.scriptResult).as("r"))
-      .filter(col("r").isNotNull)
-
-  /** Singular field ∪ plural array, as one exploded record column. */
-  private def forms(doc: DataFrame, singular: String, plural: String): DataFrame =
-    doc.filter(col(s"r.$singular").isNotNull).select(col(s"r.$singular").as("x"))
-      .unionByName(
-        doc.filter(col(s"r.$plural").isNotNull)
-          .select(explode(col(s"r.$plural")).as("x")))
+      .select(explode(concat(
+        when(one.isNotNull, array(one)).otherwise(array()),
+        coalesce(col(s"r.$plural"), array()))).as("x"))
+  }
 
   /** Metrics from one-or-many documents: `metric` ∪ `metrics[]`. */
   def metrics(jsonLines: DataFrame, collectedAt: Column, host: String = "",
       column: String = "value"): DataFrame =
-    forms(docs(jsonLines, column), "metric", "metrics")
+    forms(jsonLines, column, "metric", "metrics")
       .select(
         ts(col("x.time"), collectedAt).as("time"),
         col("x.type").as("type"),
@@ -141,7 +149,7 @@ object ScriptResults {
   /** Logs: `log` ∪ `logs[]`; absent level → "" (ref: script.go:49-52). */
   def logs(jsonLines: DataFrame, collectedAt: Column, host: String = "",
       column: String = "value"): DataFrame =
-    forms(docs(jsonLines, column), "log", "logs")
+    forms(jsonLines, column, "log", "logs")
       .select(
         ts(col("x.time"), collectedAt).as("time"),
         lit(host).as("host"),
@@ -154,7 +162,7 @@ object ScriptResults {
   /** Events: `event` ∪ `events[]` (ref: script.go:66-75). */
   def events(jsonLines: DataFrame, collectedAt: Column, host: String = "",
       column: String = "value"): DataFrame =
-    forms(docs(jsonLines, column), "event", "events")
+    forms(jsonLines, column, "event", "events")
       .select(
         ts(col("x.time"), collectedAt).as("time"),
         lit(host).as("host"),

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
@@ -19,6 +19,11 @@ import graft.operators.Enrich
   *    keys (D6)
   *  - 5s flush ticker → `Trigger.ProcessingTime` micro-batches (B1)
   *  - TTL partition drops → [[Retention.dropExpired]] (D7)
+  *
+  * Invariant: a `foreachBatch` body here executes its micro-batch's plan
+  * once — a second action on the batch would re-run the source scan and
+  * any stateful aggregation above it (pinned in LtsRouteSpec through
+  * `numInputRows` and `numRowsUpdated`).
   */
 object Ingest {
 
@@ -40,7 +45,7 @@ object Ingest {
     * reference's indexed tag path.
     */
   def writeTable(df: DataFrame, path: String, sortKeys: Seq[String],
-      derived: Seq[(String, org.apache.spark.sql.Column)] = Nil): Unit = {
+      derived: Seq[(String, Column)] = Nil): Unit = {
     val withTagCols =
       if (df.columns.contains("tags"))
         df.withColumn("tag_keys", map_keys(col("tags")))
@@ -200,9 +205,12 @@ object Ingest {
 
   /** Parquet-level MERGE for a date-partitioned table: replace rows whose
     * key appears in `batch`, keep the rest, touching ONLY the date
-    * partitions the batch lands in. The merged frame is
-    * `localCheckpoint`ed before the rewrite: the write replaces the files
-    * the plan would otherwise lazily re-read mid-rewrite.
+    * partitions the batch lands in. `batch` is `localCheckpoint`ed once
+    * and every later step reads that snapshot, so a streaming batch's plan
+    * (and its state-store update) executes exactly once. Against a live
+    * table the merged frame is snapshotted too before the rewrite: the
+    * write replaces the files the plan would otherwise lazily re-read
+    * mid-rewrite.
     *
     * Commits through the shared STAGED-SWAP protocol rather than dynamic
     * partition overwrite (r14 review — this runs inside a streaming
@@ -253,11 +261,12 @@ object Ingest {
     // partition, miss the existing row in the merge, and double-count
     // routed sums (review-found, r14 — the requireWriteZone hazard, made
     // zone-free by construction instead of gated)
-    val utcDate = expr(
-      "date_add(DATE'1970-01-01', " +
-        "CAST(FLOOR(unix_timestamp(bucket) / 86400) AS INT))")
-    val withDate = batch.withColumn("date", utcDate)
-    val dates = withDate.select("date").distinct()
+    // the batch plan runs ONCE: every later read (the date list, the
+    // anti-join, the write) reads this snapshot. A streaming batch re-run
+    // here would re-execute its stateful aggregation and update the state
+    // store a second time.
+    val dated = batch.withColumn("date", utcEpochDay).localCheckpoint(true)
+    val dates = dated.select("date").distinct()
       .collect().map(_.getDate(0): Any)
     if (dates.isEmpty) return
     new java.io.File(path).mkdirs()
@@ -280,11 +289,13 @@ object Ingest {
         else lit(false)
       if (dates.exists(_ == null)) base || col("date").isNull else base
     }
-    val merged =
-      if (!hasLive) withDate
+    // a fresh table writes the batch snapshot as is; a live table's merge
+    // reads files the swap replaces, so it is snapshotted first
+    val snapshot =
+      if (!hasLive) dated
       else {
         val existing = spark.read.parquet(path).filter(dateMatch)
-        val revised = withDate.select(keys.map(col): _*)
+        val revised = dated.select(keys.map(col): _*)
         // the anti-join must be null-safe too: a null bucket is a real
         // stored key (the default partition), and a plain equi-join
         // would never match it — the union below would then double-keep
@@ -292,9 +303,8 @@ object Ingest {
         val sameKey = keys.map(k => existing(k) <=> revised(k))
           .reduce(_ && _)
         existing.join(revised, sameKey, "left_anti")
-          .unionByName(withDate)
+          .unionByName(dated).localCheckpoint(true)
       }
-    val snapshot = merged.localCheckpoint(true)
     val stage = s"$path/.tmp-stage-${java.util.UUID.randomUUID()}"
     snapshot.write
       .option("compression", "zstd")
@@ -304,6 +314,11 @@ object Ingest {
     Artifacts.installStagedDirs(spark, stage, path, "date=")
     graft.plans.LtsRoute.invalidate(path)
   }
+
+  /** The routing date of a `bucket` instant: its UTC epoch-day. */
+  private def utcEpochDay: Column = expr(
+    "date_add(DATE'1970-01-01', " +
+      "CAST(FLOOR(unix_timestamp(bucket) / 86400) AS INT))")
 
   /** The date-derivation pin [[upsertByKey]] writes and checks: ONE
     * `datekey=` line in the table root's `_meta`.
@@ -360,11 +375,8 @@ object Ingest {
     * whose bucket derives a different date: such a table must rebuild.
     */
   def certifyUtcDateLayout(spark: SparkSession, path: String): Unit = {
-    val utcDate = expr(
-      "date_add(DATE'1970-01-01', " +
-        "CAST(FLOOR(unix_timestamp(bucket) / 86400) AS INT))")
     val bad = spark.read.parquet(path)
-      .filter(!(col("date") <=> utcDate))
+      .filter(!(col("date") <=> utcEpochDay))
       .limit(1).collect()
     require(bad.isEmpty,
       s"certifyUtcDateLayout on $path: found a row stored under " +
@@ -375,7 +387,10 @@ object Ingest {
   }
 
   /** Start the LTS maintenance stream: 1-minute downsample in update mode
-    * every 5 s, upserted into the long-term parquet table per micro-batch.
+    * every 5 s, upserted into the long-term parquet table per micro-batch
+    * by (bucket, type, host, name, tags_key) through [[upsertByKey]] — a
+    * minute whose rows span several micro-batches keeps one row, revised
+    * by each re-emission, never a partial row beside the revised one.
     */
   def streamDownsampleTo(metrics: DataFrame, path: String, checkpoint: String,
       watermark: String = "10 minutes"): StreamingQuery =
@@ -384,10 +399,7 @@ object Ingest {
       .trigger(Trigger.ProcessingTime("5 seconds"))
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.withColumn("date", to_date(col("bucket")))
-          .write.mode("append").partitionBy("date")
-          .option("compression", "zstd")
-          .parquet(path)
+        upsertByKey(batch, path, Seq("bucket", "type", "host", "name", "tags_key"))
       }
       .start()
 }

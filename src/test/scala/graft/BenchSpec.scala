@@ -126,6 +126,19 @@ class BenchSpec extends AnyFunSuite {
     assert(compact.contains(""""noisy":1000"""), compact)
   }
 
+  test("a throwing query is reported as a failure, not a timed reading") {
+    val spark = TestSpark.spark
+    import org.apache.spark.sql.functions.{lit, raise_error}
+    // thrown while the query is built, and thrown only once it executes
+    val (_, built) = Bench.timeRun(throw new IllegalStateException("boom"))
+    assert(built.exists(_.getMessage == "boom"))
+    val (_, executed) = Bench.timeRun(
+      spark.range(3).select(raise_error(lit("late boom"))))
+    assert(executed.exists(_.getMessage.contains("late boom")))
+    val (secs, ok) = Bench.timeRun(spark.range(3).toDF())
+    assert(ok.isEmpty && secs >= 0.0)
+  }
+
   test("sfOf parses the numeric scale factor from sf-named dirs") {
     assert(Bench.sfOf("/root/testdata/sf0.1") == "0.1")
     assert(Bench.sfOf("/root/testdata/sf0.001") == "0.001")

@@ -236,19 +236,29 @@ class LtsRouteSpec extends AnyFunSuite {
       f"""{"m":[{"t":"2024-01-01T00:$min%02d:$sec%02dZ","m":"gauge","h":"$host","n":"load.1","v":$v}]}"""
     val source = () => Wire.metrics(spark.readStream.text(in))
 
+    // each phase is one file = one data micro-batch; the rows it upserts
+    // are its distinct (minute, host) keys. Its plan must run once: every
+    // input line is read once (not once per envelope key spelling), and
+    // the state store updates each emitted row once.
+    def runPhase(file: String, rows: Seq[(Int, Int, String, Double)]): Unit = {
+      Files.writeString(Paths.get(s"$in/$file"),
+        rows.map { case (mi, s, h, v) => m(mi, s, h, v) + "\n" }.mkString)
+      val q = Ingest.streamLtsRollupTo(source(), ltsP, ckpt, Seq("host", "name"))
+      try q.processAllAvailable() finally q.stop()
+      val data = q.recentProgress.filter(_.numInputRows > 0)
+      assert(data.length == 1, data.map(_.json).mkString("\n"))
+      assert(data.head.numInputRows == rows.size, data.head.json)
+      assert(data.head.stateOperators(0).numRowsUpdated ==
+        rows.map { case (mi, _, h, _) => (mi, h) }.distinct.size, data.head.json)
+    }
+
     // phase 1: two rows in minute 0, one in minute 1
-    Files.writeString(Paths.get(s"$in/a.json"),
-      m(0, 10, "a", 1.5) + "\n" + m(0, 40, "a", 2.25) + "\n" + m(1, 5, "b", 4.0) + "\n")
-    val q1 = Ingest.streamLtsRollupTo(source(), ltsP, ckpt, Seq("host", "name"))
-    try q1.processAllAvailable() finally q1.stop()
+    runPhase("a.json", Seq((0, 10, "a", 1.5), (0, 40, "a", 2.25), (1, 5, "b", 4.0)))
 
     // phase 2 lands while the pipeline is down: a LATE row revising minute
     // 0's partial sums (the upsert must REPLACE, not append) + a new minute.
     // Restart from the same checkpoint → aggregate state resumes.
-    Files.writeString(Paths.get(s"$in/b.json"),
-      m(0, 55, "a", 10.0) + "\n" + m(2, 30, "a", 7.0) + "\n")
-    val q2 = Ingest.streamLtsRollupTo(source(), ltsP, ckpt, Seq("host", "name"))
-    try q2.processAllAvailable() finally q2.stop()
+    runPhase("b.json", Seq((0, 55, "a", 10.0), (2, 30, "a", 7.0)))
 
     // the same rows as a raw batch table (Wire transforms are engine-shared)
     Wire.metrics(spark.read.text(in))

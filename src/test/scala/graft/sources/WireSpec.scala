@@ -66,6 +66,22 @@ class WireSpec extends AnyFunSuite {
     assert(names == Set("short.key", "long.key"))
   }
 
+  test("each parser scans its input once and evaluates the envelope JSON once") {
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    val dir = java.nio.file.Files.createTempDirectory("graft_wire_plan")
+    java.nio.file.Files.writeString(dir.resolve("a.json"), batch + "\n")
+    val lines = spark.read.text(dir.toString)
+    Seq("metrics" -> Wire.metrics(lines), "logs" -> Wire.logs(lines),
+        "events" -> Wire.events(lines)).foreach { case (name, df) =>
+      val plan = df.queryExecution.executedPlan
+      val parses = plan.flatMap(_.expressions)
+        .flatMap(_.collect { case j: JsonToStructs => j })
+      assert(plan.collectLeaves().size == 1, s"$name scans:\n$plan")
+      assert(parses.size == 1, s"$name from_json evaluations:\n$plan")
+      assert(df.count() == 1, name)
+    }
+  }
+
   test("malformed JSON is dropped without failing the stream") {
     val df = Seq("not json at all", batch).toDF("value")
     assert(Wire.metrics(df).count() == 1)

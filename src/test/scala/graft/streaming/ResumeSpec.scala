@@ -60,4 +60,35 @@ class ResumeSpec extends AnyFunSuite {
     assert(byName("rx") == 10.0)    // counter sum
     assert(out.filter(col("date").isNull).count() == 0)
   }
+
+  test("LTS downsample stream keeps one row per minute revised across micro-batches") {
+    val in = Files.createTempDirectory("graft_lts2_in").toString
+    val lts = Files.createTempDirectory("graft_lts2_out").toString + "/lts"
+    val ckpt = Files.createTempDirectory("graft_lts2_ckpt").toString
+    def row(sec: Int, typ: String, name: String, v: Double) =
+      f"""{"m":[{"t":"2024-01-01T00:00:$sec%02dZ","m":"$typ","h":"a","n":"$name","v":$v}]}""" + "\n"
+    Files.writeString(Paths.get(s"$in/a.json"),
+      row(1, "gauge", "load.1", 1.0) + row(5, "counter", "rx", 10.0))
+    val q = Ingest.streamDownsampleTo(
+      Wire.metrics(spark.readStream.text(in)), lts, ckpt)
+    try {
+      q.processAllAvailable()
+      // the second file revises both minute-0 series in a later batch; it
+      // is moved in whole so the running stream never lists it half-written
+      val staged = Files.writeString(Files.createTempFile("graft_lts2", ".json"),
+        row(3, "gauge", "load.1", 4.0) + row(6, "counter", "rx", 5.0))
+      Files.move(staged, Paths.get(s"$in/b.json"),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      q.processAllAvailable()
+      assert(q.recentProgress.count(_.numInputRows > 0) == 2)
+    } finally q.stop()
+    val out = spark.read.parquet(lts).collect()
+    // one row per (bucket, type, host, name, tags_key), holding the
+    // revised aggregate, not the first batch's partial beside it
+    assert(out.length == 2, out.mkString("\n"))
+    val byName = out.map(r =>
+      r.getAs[String]("name") -> (r.getAs[Double]("value"), r.getAs[Long]("n"))).toMap
+    assert(byName("load.1") == (2.5, 2L)) // avg of gauge 1.0, 4.0
+    assert(byName("rx") == (15.0, 2L))    // counter sum 10 + 5
+  }
 }
