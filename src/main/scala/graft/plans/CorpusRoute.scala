@@ -89,7 +89,7 @@ object CorpusRoute extends Rule[LogicalPlan] {
     * entry, crash-exact end to end (r15; this retired the r14 CRASH
     * CAVEAT): the batch's (lang, source) partials land as ledger-tagged
     * blind segment files by staged write + per-file rename (the
-    * [[appendRollup]] machinery — no read of existing state, no delete
+    * [[maintainRollup]] machinery — no read of existing state, no delete
     * of live state at ANY crash point), auto-compacted past
     * `maxSegments`, and every routed measure re-aggregates its stored
     * partials at read ([[remerge]]'s algebra inside the rewrite), so
@@ -112,65 +112,27 @@ object CorpusRoute extends Rule[LogicalPlan] {
       () => invalidate(rollupPath))
   }
 
-  /** BLIND tagged-segment append — the STREAMING maintenance entry's
-    * write half ([[graft.streaming.RollupStream.corpusAppendStream]]):
-    * the batch's per-(lang, source) partials land as ONE tagged file
-    * per touched lang dir (staged write + per-file rename — no read of
-    * existing state, O(batch) work however large the rollup). Extra
-    * segment rows per group are SOUND for every routed measure because
-    * the rewrite itself re-aggregates its partials (counts/sums ADD,
-    * mins MIN, maxes MAX, avg = sum/count of folded partials) — the
-    * same algebra [[upsertRollup]] merges with. The partials are
-    * additive bag state (the TagIndex class, not KMV's
-    * multiplicity-invariant class), so replay-exactness under
-    * at-least-once delivery is the file-tag protocol: a replay first
-    * DELETES files carrying its own tag. Untagged appends get a unique
-    * adhoc tag and require an exactly-once caller.
-    */
-  def appendRollup(spark: SparkSession, rollupPath: String,
-      newDocs: DataFrame,
-      appendTag: Option[(String, String)] = None): Unit = {
-    import graft.operators.Artifacts
-    require(new java.io.File(rollupPath).isDirectory,
-      s"appendRollup on $rollupPath with no rollup — build it first")
-    val (owner, sticky) = Artifacts.leaseIdentity(appendTag)
-    Artifacts.withLease(rollupPath, owner, sticky) {
-      recoverRollup(rollupPath)
-      val prefix = Artifacts.segPrefix(appendTag)
-      if (appendTag.isDefined)
-        Artifacts.deleteTaggedFiles(rollupPath, "lang=", prefix)
-      RouteSupport.stagePublish(rollupPath, rollupOf(newDocs), "lang",
-        prefix)
-      invalidate(rollupPath)
-    }
-  }
-
-  /** The per-batch STREAMING maintenance entry: delete-own-tag →
-    * lang-local compaction → tagged blind append, in that order — the
-    * [[QuantileRoute.maintainRollup]] ordering rule (compaction folds
-    * tags away, so it must only ever fold COMMITTED batches' tags, and
-    * Structured Streaming replays only the last uncommitted batch; a
-    * replay entering here removes its own crashed residue before the
-    * compaction can fold it).
+  /** The per-batch STREAMING maintenance entry
+    * ([[graft.streaming.RollupStream.corpusAppendStream]]): the batch's
+    * per-(lang, source) partials land as ONE tagged file per touched
+    * lang dir (staged write + per-file rename — no read of existing
+    * state, O(batch) work however large the rollup), after
+    * delete-own-tag and lang-local compaction past `maxSegments`, in
+    * the [[RouteSupport.taggedAppend]] order. Extra segment rows per
+    * group are SOUND for every routed measure because the rewrite
+    * itself re-aggregates its partials (counts/sums ADD, mins MIN,
+    * maxes MAX, avg = sum/count of folded partials) — the same algebra
+    * [[upsertRollup]] merges with. The partials are additive bag state,
+    * so replay-exactness under at-least-once delivery is the file-tag
+    * protocol: a replay first DELETES files carrying its own tag.
     */
   def maintainRollup(spark: SparkSession, rollupPath: String,
       newDocs: DataFrame, tag: (String, String),
       maxSegments: Int = 8): Unit =
-    // ONE lease acquisition for the whole batch entry (streamId-owned,
-    // standing) — the nested compact/append re-enter it
-    graft.operators.Artifacts.withLease(rollupPath, tag._1, sticky = true) {
-      recoverRollup(rollupPath)
-      // delete the replay's own crashed residue BEFORE the compaction
-      // below could fold it untagged; appendRollup's internal delete
-      // runs too late (after the compact) and is then a no-op
-      // re-delete — composing keeps the append protocol ONE body
-      // (review-found, r14)
-      graft.operators.Artifacts.deleteTaggedFiles(rollupPath, "lang=",
-        graft.operators.Artifacts.segPrefix(Some(tag)))
-      if (rollupSegments(rollupPath) > maxSegments)
-        compactLangs(spark, rollupPath, maxSegments, Some(tag._1))
-      appendRollup(spark, rollupPath, newDocs, Some(tag))
-    }
+    RouteSupport.taggedAppend(rollupPath, "lang", Some(tag), maxSegments,
+      rollupOf(newDocs),
+      owner => compactLangs(spark, rollupPath, maxSegments, Some(owner)),
+      () => invalidate(rollupPath))
 
   /** LANG-local segment compaction: every lang dir past `maxSegments`
     * files re-folds through the merge algebra ([[remerge]] — the same
@@ -186,12 +148,6 @@ object CorpusRoute extends Rule[LogicalPlan] {
       invalidate(rollupPath)
     }
   }
-
-  /** Heal a crashed lang-dir swap and sweep crashed staged-append trees
-    * — call at maintenance entry.
-    */
-  def recoverRollup(rollupPath: String): Unit =
-    RouteSupport.recoverRollup(rollupPath, "lang")
 
   /** MAX parquet file count across lang dirs — the segment proxy a
     * continuous maintainer bounds.

@@ -118,13 +118,8 @@ object KmvRoute extends Rule[LogicalPlan] {
     // untagged entry — scoped unique-owner lease: excludes OVERLAPPING
     // maintenance (the physical swap/rename races), while KMV's
     // multiplicity-invariance needs no standing replay window
-    val (owner, _) = graft.operators.Artifacts.leaseIdentity(None)
-    graft.operators.Artifacts.withLease(rollupPath, owner, sticky = false) {
-      recoverRollup(rollupPath)
-      RouteSupport.stagePublish(rollupPath, rollupOf(newEvents, k), "day",
-        graft.operators.Artifacts.segPrefix(None))
-      invalidate(rollupPath)
-    }
+    RouteSupport.taggedAppend(rollupPath, "day", None, Int.MaxValue,
+      rollupOf(newEvents, k), _ => (), () => invalidate(rollupPath))
   }
 
   /** The per-batch STREAMING maintenance entry: day-local compaction
@@ -135,13 +130,11 @@ object KmvRoute extends Rule[LogicalPlan] {
     */
   def maintainRollup(spark: SparkSession, rollupPath: String,
       newEvents: DataFrame, k: Int, maxSegments: Int = 8): Unit = {
-    val (owner, _) = graft.operators.Artifacts.leaseIdentity(None)
-    graft.operators.Artifacts.withLease(rollupPath, owner, sticky = false) {
-      recoverRollup(rollupPath)
-      if (rollupSegments(rollupPath) > maxSegments)
-        compactDays(spark, rollupPath, k, maxSegments)
-      appendRollup(spark, rollupPath, newEvents, k)
-    }
+    RouteSupport.requireWriteZone(spark, rollupPath, "kmv rollup")
+    RouteSupport.taggedAppend(rollupPath, "day", None, maxSegments,
+      rollupOf(newEvents, k),
+      _ => compactDays(spark, rollupPath, k, maxSegments),
+      () => invalidate(rollupPath))
   }
 
   /** DAY-local segment compaction: every day dir past `maxSegments`
@@ -165,12 +158,6 @@ object KmvRoute extends Rule[LogicalPlan] {
       invalidate(rollupPath)
     }
   }
-
-  /** Heal a crashed day-dir swap and sweep crashed staged-append trees
-    * — call at maintenance entry.
-    */
-  def recoverRollup(rollupPath: String): Unit =
-    RouteSupport.recoverRollup(rollupPath, "day")
 
   /** MAX parquet file count across day dirs — the segment proxy a
     * continuous maintainer bounds.

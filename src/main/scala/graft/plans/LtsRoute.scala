@@ -1,7 +1,7 @@
 package graft.plans
 
 import scala.collection.concurrent.TrieMap
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
@@ -20,6 +20,9 @@ import org.apache.spark.sql.types.{DecimalType, LongType, StringType}
   * coarsening). Decimal re-aggregation is exact, so routed plans are
   * bit-identical to raw scans while reading ~1/rows-per-minute of the data
   * — at 100 TB the difference between a full-history scan and an index hit.
+  * Because the rewrite re-aggregates, the rollup may hold several partial
+  * rows per (bucket, dims) key — one per maintained segment
+  * ([[maintainRollup]]) — like the partial parts a MergeTree merges later.
   *
   * Rewrites happen only when EVERY grouping/aggregate expression is
   * re-aggregable from the rollup; anything else (raw-grain groupings,
@@ -36,19 +39,14 @@ object LtsRoute extends Rule[LogicalPlan] {
   /** raw-table root path (fully qualified) → LTS rollup path. */
   private val routes = TrieMap[String, String]()
 
-  private def canon(spark: SparkSession, path: String): String = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(hp).toString
-  }
-
   /** Register a raw→LTS route; the LTS table must be the minute rollup of
     * the raw table with schema (bucket, <dims...>, sum_value, n).
     */
   def register(spark: SparkSession, rawPath: String, ltsPath: String): Unit =
-    routes.put(canon(spark, rawPath), ltsPath): Unit
+    routes.put(RouteSupport.canon(spark, rawPath), ltsPath): Unit
 
   def deregister(spark: SparkSession, rawPath: String): Unit =
-    routes.remove(canon(spark, rawPath)): Unit
+    routes.remove(RouteSupport.canon(spark, rawPath)): Unit
 
   /** Idempotently attach the rule to a live session. */
   def enable(spark: SparkSession): Unit = this.synchronized {
@@ -78,51 +76,70 @@ object LtsRoute extends Rule[LogicalPlan] {
   // this rule per query — re-listing files there would be blocking I/O in
   // every plan); newInstance() refreshes exprIds per use so two routed
   // aggregates in one query never collide. Shared scaffold (r14): the
-  // streaming maintainer now commits through date-dir aside-rename
-  // swaps (Ingest.upsertByKey), so a cache miss must decline to route
-  // while crashed-swap residue exists — a fresh listing would silently
-  // drop (or string-infer) the aside day.
+  // maintainer's date-local compaction commits through date-dir
+  // aside-rename swaps, so a cache miss must decline to route while
+  // crashed-swap residue exists — a fresh listing would silently drop
+  // (or string-infer) the aside day.
   private val ltsRelations = new RouteSupport.RelationCache("date")
 
   /** Drop the cached relation for a route target whose FILES changed —
-    * streaming-maintained rollups ([[graft.streaming.Ingest
-    * .streamLtsRollupTo]]) rewrite partitions every micro-batch, and a
-    * stale cached file listing would route queries onto deleted files.
+    * a streaming-maintained rollup ([[maintainRollup]]) publishes new
+    * segment files every micro-batch and compacts date dirs now and
+    * then, and a stale cached file listing would miss the new segments
+    * or route queries onto deleted files.
     */
   def invalidate(ltsPath: String): Unit = ltsRelations.invalidate(ltsPath)
 
-  private def ltsRelationFor(ltsPath: String): Option[LogicalRelation] =
-    ltsRelations.relationFor(ltsPath)
+  /** The per-batch entry of a streaming-maintained rollup
+    * ([[graft.streaming.Ingest.streamLtsRollupTo]]): the batch's
+    * [[graft.streaming.Ingest.ltsRollup]] rows, dated by their bucket's
+    * UTC epoch-day, land as ONE tagged segment file per touched `date=`
+    * dir through the shared tagged-segment protocol
+    * ([[RouteSupport.taggedAppend]]: lease, recover, delete-own-tag,
+    * date-local compaction past `maxSegments`, staged publish,
+    * invalidate). No state store and no rewrite of stored rows: a late
+    * row just adds a partial for its minute in a later segment, and the
+    * rewrite already re-aggregates partials (`sum(sum_value)`,
+    * `sum(n)`), exact for decimal sums, so routed answers stay
+    * bit-identical to the raw scan. `tag` = (streamId, batchId) makes a
+    * replay of the last uncommitted batch overwrite its own segment.
+    */
+  def maintainRollup(ltsPath: String, metrics: DataFrame, dims: Seq[String],
+      tag: (String, String), maxSegments: Int = 8): Unit = {
+    import graft.streaming.Ingest
+    RouteSupport.taggedAppend(ltsPath, "date", Some(tag), maxSegments,
+      Ingest.ltsRollup(metrics, dims).withColumn("date", Ingest.utcEpochDay),
+      _ => RouteSupport.compactPartitions(metrics.sparkSession, ltsPath,
+        "date", maxSegments)(remerge),
+      () => invalidate(ltsPath))
+  }
 
-  /** Match Aggregate over the registered relation. The optimizer pulls
-    * complex grouping expressions into a child Project
-    * (PullOutGroupingExpressions), so project aliases are inlined back
-    * into the aggregate before pattern-matching against the raw columns.
+  /** Fold rollup segments to one row per key — every column but the
+    * two measures is key. The sum is cast back to the stored decimal
+    * type, the one the rewrite's sum-type check matches.
+    */
+  private def remerge(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, sum}
+    df.groupBy(df.columns.filterNot(Set("sum_value", "n")).map(col): _*)
+      .agg(sum(col("sum_value")).cast(df.schema("sum_value").dataType)
+        .as("sum_value"), sum(col("n")).as("n"))
+  }
+
+  /** Match Aggregate over the registered relation, after the shared
+    * Project-inlining preamble ([[RouteSupport.inlineProject]]).
     */
   private def rewrite(agg: Aggregate): Option[LogicalPlan] = agg.child match {
     case lr: LogicalRelation =>
       routeFor(lr).flatMap(buildRewrite(agg, lr, _))
     case Project(projList, lr: LogicalRelation) =>
-      val aliasOf = projList.collect {
-        case al: Alias => al.toAttribute.exprId -> al.child
-      }.toMap
-      def inline(e: Expression): Expression = e.transformUp {
-        case a: AttributeReference if aliasOf.contains(a.exprId) => aliasOf(a.exprId)
-      }
-      val inlined = Aggregate(
-        agg.groupingExpressions.map(inline),
-        agg.aggregateExpressions.map(ne => inline(ne) match {
-          case n: NamedExpression => n
-          case other => Alias(other, ne.name)(exprId = ne.exprId)
-        }),
-        lr)
-      routeFor(lr).flatMap(buildRewrite(inlined, lr, _))
+      routeFor(lr).flatMap(
+        buildRewrite(RouteSupport.inlineProject(agg, projList, lr), lr, _))
     case _ => None
   }
 
   private def buildRewrite(agg: Aggregate, lr: LogicalRelation,
       ltsPath: String): Option[LogicalPlan] = {
-    val ltsRel = ltsRelationFor(ltsPath).getOrElse(return None)
+    val ltsRel = ltsRelations.relationFor(ltsPath).getOrElse(return None)
     val lts: Map[String, Attribute] = ltsRel.output.map(a => a.name -> a).toMap
     if (!Seq("bucket", "sum_value", "n").forall(lts.contains)) return None
     val rawName: Map[ExprId, String] = lr.output.map(a => a.exprId -> a.name).toMap

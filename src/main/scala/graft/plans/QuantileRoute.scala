@@ -114,55 +114,30 @@ object QuantileRoute extends Rule[LogicalPlan] {
   def appendRollup(spark: SparkSession, rollupPath: String,
       newEvents: DataFrame,
       appendTag: Option[(String, String)] = None): Unit = {
-    import graft.operators.Artifacts
     require(new java.io.File(rollupPath).isDirectory,
       s"appendRollup on $rollupPath with no rollup — build it first")
     RouteSupport.requireWriteZone(spark, rollupPath, "quantile rollup")
-    val (owner, sticky) = Artifacts.leaseIdentity(appendTag)
-    Artifacts.withLease(rollupPath, owner, sticky) {
-      recoverRollup(rollupPath)
-      val prefix = Artifacts.segPrefix(appendTag)
-      if (appendTag.isDefined)
-        Artifacts.deleteTaggedFiles(rollupPath, "day=", prefix)
-      RouteSupport.stagePublish(rollupPath, rollupOf(newEvents), "day",
-        prefix)
-      invalidate(rollupPath)
-    }
+    RouteSupport.taggedAppend(rollupPath, "day", appendTag, Int.MaxValue,
+      rollupOf(newEvents), _ => (), () => invalidate(rollupPath))
   }
 
   /** The per-batch STREAMING maintenance entry
     * ([[graft.streaming.RollupStream.qhistAppendStream]]): delete-own-tag
     * → day-local compaction → tagged blind append, IN THAT ORDER — the
-    * ordering is what keeps the crash-replay of the CURRENT batch exact
-    * with auto-compaction on. Compaction folds tagged segments into
-    * untagged files (losing their tags), so it must only ever fold
-    * COMMITTED batches' tags — and Structured Streaming replays only
-    * the last uncommitted batch (the TextIndex postings contract:
-    * "maintainers must not replay batches older than their last
-    * compaction"). A replay entering here first removes its own crashed
-    * attempt's residue, THEN compacts (folding only ≤ N−1 committed
-    * tags), then re-appends fresh. Compaction-after-append would
-    * instead fold batch N's own tag before its commit, leaving a crash
-    * window where the replay finds nothing to delete and double-counts.
+    * ordering ([[RouteSupport.taggedAppend]]) is what keeps the
+    * crash-replay of the CURRENT batch exact with auto-compaction on
+    * (the TextIndex postings contract: "maintainers must not replay
+    * batches older than their last compaction").
     */
   def maintainRollup(spark: SparkSession, rollupPath: String,
       newEvents: DataFrame, tag: (String, String),
-      maxSegments: Int = 8): Unit =
-    // ONE lease acquisition for the whole batch entry (streamId-owned,
-    // standing) — the nested compact/append re-enter it
-    graft.operators.Artifacts.withLease(rollupPath, tag._1, sticky = true) {
-      recoverRollup(rollupPath)
-      // the replay's own crashed residue must vanish BEFORE the
-      // compaction below could fold it untagged; appendRollup's
-      // internal delete runs too late (after the compact) and is then
-      // a no-op re-delete — composing keeps the append protocol ONE
-      // body (review-found, r14)
-      graft.operators.Artifacts.deleteTaggedFiles(rollupPath, "day=",
-        graft.operators.Artifacts.segPrefix(Some(tag)))
-      if (rollupSegments(rollupPath) > maxSegments)
-        compactDays(spark, rollupPath, maxSegments, Some(tag._1))
-      appendRollup(spark, rollupPath, newEvents, Some(tag))
-    }
+      maxSegments: Int = 8): Unit = {
+    RouteSupport.requireWriteZone(spark, rollupPath, "quantile rollup")
+    RouteSupport.taggedAppend(rollupPath, "day", Some(tag), maxSegments,
+      rollupOf(newEvents),
+      owner => compactDays(spark, rollupPath, maxSegments, Some(owner)),
+      () => invalidate(rollupPath))
+  }
 
   /** DAY-LOCAL segment compaction — the family-standard read-economy
     * restorer: every day dir past `maxSegments` files is re-merged to

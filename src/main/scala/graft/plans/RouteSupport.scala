@@ -1,19 +1,21 @@
 package graft.plans
 
 import scala.collection.concurrent.TrieMap
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types.{DateType, IntegerType, LongType, TimestampType}
 
-/** Scaffolding shared by the day-grain sketch-routing rules
-  * ([[KmvRoute]], [[QuantileRoute]]) — extracted (r14 review pass)
-  * because the r13-ADVICE timezone fixes had to be hand-replicated
-  * between them: the zone discipline, the normalized-ts/day-grain plan
-  * matchers, the resolved-once rollup-relation cache, and the
-  * Project-inlining rewrite preamble are ONE audited implementation
-  * now, so the next matcher or zone fix cannot silently miss a route.
+/** Scaffolding shared by the routing rules — extracted (r14 review
+  * pass) because the r13-ADVICE timezone fixes had to be
+  * hand-replicated between them: the zone discipline, the
+  * normalized-ts/day-grain plan matchers, the resolved-once
+  * rollup-relation cache, the Project-inlining rewrite preamble and the
+  * tagged-segment maintenance protocol every maintained rollup
+  * ([[KmvRoute]], [[QuantileRoute]], [[CorpusRoute]], [[LtsRoute]])
+  * appends through are ONE audited implementation, so the next matcher,
+  * zone or protocol fix cannot silently miss a route.
   */
 private[plans] object RouteSupport {
 
@@ -165,7 +167,7 @@ private[plans] object RouteSupport {
     * to parquet readers while staging — the TagIndex pattern), so
     * [[recoverRollup]] can sweep a crashed attempt's leftovers.
     */
-  def stagePublish(rollupPath: String, delta: org.apache.spark.sql.DataFrame,
+  def stagePublish(rollupPath: String, delta: DataFrame,
       partCol: String, prefix: String): Unit = {
     import graft.operators.Artifacts
     val stage = s"$rollupPath/.tmp-stage-${java.util.UUID.randomUUID()}"
@@ -183,7 +185,7 @@ private[plans] object RouteSupport {
     */
   def compactPartitions(spark: SparkSession, rollupPath: String,
       partCol: String, maxSegments: Int)(
-      merge: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+      merge: DataFrame => DataFrame)
       : Unit = {
     import graft.operators.Artifacts
     recoverRollup(rollupPath, partCol)
@@ -228,40 +230,72 @@ private[plans] object RouteSupport {
     graft.operators.Artifacts.maxFoldableSegmentsIn(rollupPath,
       s"$partCol=")
 
-  /** The ONE batch-ledgered upsert body shared by the three routes
-    * (r15 review — the protocol was three near-verbatim copies, the
-    * exact crash-window-duplication class the r14 maintainRollup
-    * ordering bug lived in): under the maintenance lease — recover,
-    * skip a MARKED re-delivery, delete-own-tag, compact past the
-    * foldable bound (as the same lease owner), blind tagged staged
-    * publish, mark committed. Routes differ only in partition column,
-    * delta construction, and compactor — passed in.
+  /** The ONE tagged-segment maintenance body every route's append
+    * entry runs, so an ordering or crash-window fix cannot miss a
+    * route: under the maintenance lease — recover, skip a `committed`
+    * re-delivery, delete-own-tag, compact past the foldable bound (as
+    * the same lease owner), blind tagged staged publish, `commit`,
+    * invalidate. Routes differ only in partition column, delta
+    * construction and compactor — passed in.
+    *
+    * Delete-own-tag runs BEFORE the compaction: compaction folds
+    * tagged segments into untagged files, so it must only ever fold
+    * committed batches' tags. Structured Streaming replays only the
+    * last uncommitted batch, so a replay entering here removes its own
+    * crashed residue first and the compaction then folds only earlier
+    * tags; compacting after the append would fold the current batch's
+    * own tag before its commit, and a crash there would re-append it.
     */
-  def ledgeredUpsert(rollupPath: String, partCol: String,
-      batchTag: Option[(String, String)], maxSegments: Int,
-      delta: => org.apache.spark.sql.DataFrame,
-      compact: String => Unit,
-      invalidate: () => Unit): Unit = {
+  private def publishSegment(rollupPath: String, partCol: String,
+      tag: Option[(String, String)], prefix: String, maxSegments: Int,
+      delta: => DataFrame, compact: String => Unit, invalidate: () => Unit,
+      committed: => Boolean, commit: => Unit): Unit = {
     import graft.operators.Artifacts
-    require(new java.io.File(rollupPath).isDirectory,
-      s"upsertRollup on $rollupPath with no rollup — build it first")
-    val (owner, sticky) = Artifacts.leaseIdentity(batchTag)
+    val (owner, sticky) = Artifacts.leaseIdentity(tag)
     Artifacts.withLease(rollupPath, owner, sticky) {
       recoverRollup(rollupPath, partCol)
-      if (!batchTag.exists(Artifacts.isCommitted(rollupPath, _))) {
-        val prefix = batchTag.map(Artifacts.ledgerPrefix)
-          .getOrElse(Artifacts.segPrefix(None))
-        // a crashed earlier attempt's residue must vanish BEFORE the
-        // compaction (which only spares files still carrying the tag)
-        if (batchTag.isDefined)
+      if (!committed) {
+        if (tag.isDefined)
           Artifacts.deleteTaggedFiles(rollupPath, s"$partCol=", prefix)
         if (foldableSegments(rollupPath, partCol) > maxSegments)
           compact(owner)
         stagePublish(rollupPath, delta, partCol, prefix)
-        batchTag.foreach(Artifacts.markCommitted(rollupPath, _))
+        commit
         invalidate()
       }
     }
+  }
+
+  /** The streaming / exactly-once append: `tag` = (streamId, batchId)
+    * makes a replay of the last uncommitted batch overwrite its own
+    * segment files (the `seg-` namespace, foldable at once); an
+    * untagged call publishes under a unique adhoc tag and needs an
+    * exactly-once caller (or a multiplicity-invariant state).
+    */
+  def taggedAppend(rollupPath: String, partCol: String,
+      tag: Option[(String, String)], maxSegments: Int, delta: => DataFrame,
+      compact: String => Unit, invalidate: () => Unit): Unit =
+    publishSegment(rollupPath, partCol, tag,
+      graft.operators.Artifacts.segPrefix(tag), maxSegments, delta, compact,
+      invalidate, committed = false, commit = ())
+
+  /** The batch-ledgered upsert for AT-LEAST-ONCE batch callers: a
+    * MARKED re-delivery is skipped, an unmarked one overwrites its own
+    * `segb-` files and marks the tag committed
+    * ([[graft.operators.Artifacts.ledgerPrefix]]).
+    */
+  def ledgeredUpsert(rollupPath: String, partCol: String,
+      batchTag: Option[(String, String)], maxSegments: Int,
+      delta: => DataFrame, compact: String => Unit,
+      invalidate: () => Unit): Unit = {
+    import graft.operators.Artifacts
+    require(new java.io.File(rollupPath).isDirectory,
+      s"upsertRollup on $rollupPath with no rollup — build it first")
+    publishSegment(rollupPath, partCol, batchTag,
+      batchTag.map(Artifacts.ledgerPrefix).getOrElse(Artifacts.segPrefix(None)),
+      maxSegments, delta, compact, invalidate,
+      committed = batchTag.exists(Artifacts.isCommitted(rollupPath, _)),
+      commit = batchTag.foreach(Artifacts.markCommitted(rollupPath, _)))
   }
 
   /** Heal a maintained rollup at maintenance entry: complete or roll

@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import graft.operators.Enrich
 
 /** Storage layer of the engine — the Spark re-expression of the reference's
@@ -23,7 +23,8 @@ import graft.operators.Enrich
   * Invariant: a `foreachBatch` body here executes its micro-batch's plan
   * once — a second action on the batch would re-run the source scan and
   * any stateful aggregation above it (pinned in LtsRouteSpec through
-  * `numInputRows` and `numRowsUpdated`).
+  * `numInputRows`). The LTS rollup stream holds no state at all: each
+  * batch appends its own minute partials ([[streamLtsRollupTo]]).
   */
 object Ingest {
 
@@ -172,36 +173,47 @@ object Ingest {
       .dropDuplicatesWithinWatermark(keyCols.head, keyCols.tail: _*)
   }
 
-  /** Continuously maintain a [[ltsRollup]]-SHAPED table — (bucket, dims...,
-    * sum_value decimal, n) — so it can be registered as a
-    * [[graft.plans.LtsRoute]] target: routed minute-or-coarser aggregates
-    * then serve CONTINUOUSLY-INGESTED data, not just batch-built rollups.
-    * Update-mode re-emissions (late rows inside the watermark revise their
-    * minute's partial sums) are upserted via [[upsertByKey]], and the
-    * route's cached relation is invalidated per batch so routed queries
-    * always see the latest files. Equivalence with a raw-scan recompute —
-    * including across a checkpoint stop/restart — is pinned in
-    * LtsRouteSpec.
+  /** Continuously maintain a [[ltsRollup]]-shaped table, partitioned by
+    * the bucket's UTC epoch-day `date`, as a [[graft.plans.LtsRoute]]
+    * target. The stream is stateless: each micro-batch aggregates its own
+    * rows into their minutes, whatever their arrival time (yamon's
+    * insert-time materialized views, ref: res/schema.sql:39-50,71-82),
+    * and publishes one tagged segment per touched date dir
+    * ([[graft.plans.LtsRoute.maintainRollup]]). The route re-aggregates
+    * a minute's partials across segments, so a late row of any age
+    * counts in the rollup as in the raw table. The tag is (the query id
+    * the checkpoint persists, batchId): a restart replays its last
+    * uncommitted batch under the same tag, overwriting that segment.
+    * Pinned in LtsRouteSpec across a restart, a late row, a replay and a
+    * compaction.
     */
   def streamLtsRollupTo(metrics: DataFrame, path: String, checkpoint: String,
-      dims: Seq[String], watermark: String = "10 minutes"): StreamingQuery =
-    metrics
-      .withWatermark("time", watermark)
-      .groupBy(window(col("time"), "1 minute").as("w") +: dims.map(col): _*)
-      .agg(
-        sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
-          .as("sum_value"),
-        count(lit(1)).as("n"))
-      .select(col("w.start").as("bucket") +: dims.map(col) :+
-        col("sum_value") :+ col("n"): _*)
-      .writeStream
-      .outputMode(OutputMode.Update())
+      dims: Seq[String]): StreamingQuery = {
+    requireLocal(path, "streamLtsRollupTo")
+    metrics.writeStream
       .trigger(Trigger.ProcessingTime("5 seconds"))
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertByKey(batch, path, "bucket" +: dims)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val queryId = batch.sparkSession.sparkContext.getLocalProperty(
+          StreamExecution.QUERY_ID_KEY)
+        graft.plans.LtsRoute.maintainRollup(path, batch, dims,
+          (queryId, batchId.toString))
       }
       .start()
+  }
+
+  /** The maintained tables commit by `java.io.File` renames: a remote
+    * path would stage remotely but install against the LOCAL view,
+    * silently writing nothing (review-found, r14), so refuse loudly. A
+    * distributed deployment needs an FS with POSIX renames or a table
+    * format with a transactional commit.
+    */
+  private def requireLocal(path: String, what: String): Unit = {
+    val scheme = new java.net.URI(path).getScheme
+    require(scheme == null || scheme == "file",
+      s"$what commits by local-filesystem renames; got '$path' " +
+        s"(scheme '$scheme') — use a local path or a transactional table format")
+  }
 
   /** Parquet-level MERGE for a date-partitioned table: replace rows whose
     * key appears in `batch`, keep the rest, touching ONLY the date
@@ -243,17 +255,7 @@ object Ingest {
       keys: Seq[String]): Unit = {
     import graft.operators.Artifacts
     val spark = batch.sparkSession
-    // the swap protocol is java.io.File renames — a remote path would
-    // stage on the remote FS but install/sweep against the LOCAL view,
-    // silently writing nothing (review-found, r14); refuse loudly. (The
-    // whole maintained-artifact layer shares this local-rename contract;
-    // a distributed deployment fronts these tables with an FS that
-    // exposes POSIX renames, or swaps this layer for a table format
-    // with a transactional commit.)
-    val scheme = new java.net.URI(path).getScheme
-    require(scheme == null || scheme == "file",
-      s"upsertByKey commits by local-filesystem renames; got '$path' " +
-        s"(scheme '$scheme') — use a local path or a transactional table format")
+    requireLocal(path, "upsertByKey")
     // the routing date is derived from the bucket's INSTANT (UTC epoch
     // days), never from to_date's session-zone calendar: a maintainer
     // session restarted under a different spark.sql.session.timeZone
@@ -316,7 +318,7 @@ object Ingest {
   }
 
   /** The routing date of a `bucket` instant: its UTC epoch-day. */
-  private def utcEpochDay: Column = expr(
+  private[graft] def utcEpochDay: Column = expr(
     "date_add(DATE'1970-01-01', " +
       "CAST(FLOOR(unix_timestamp(bucket) / 86400) AS INT))")
 

@@ -22,7 +22,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
   *    delivery — no tags, no ledger ([[kmvAppendStream]]).
   *  - Histogram states are ADDITIVE (bag rows — the TagIndex class):
   *    a re-delivered batch would double-count, so the maintainer uses
-  *    the file-tag protocol ([[graft.plans.QuantileRoute.appendRollup]]
+  *    the file-tag protocol ([[graft.plans.QuantileRoute.maintainRollup]]
   *    with tag = (streamId, batchId)): a replay first deletes its own
   *    tagged segment files, converging every crash point to
   *    exactly-once; the route's re-merge aggregate folds the per-batch
@@ -34,6 +34,11 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
   * segment publish); the KMV upsert reads only the touched days' state
   * rows (#batch-days rows — KBs). Neither re-reads the corpus, and the
   * routed READ cost stays rollup-sized between and during maintenance.
+  *
+  * Each `foreachBatch` body runs its batch's plan once (the
+  * [[Ingest]] invariant): an empty batch's delta publishes no segment,
+  * so there is no emptiness pre-check — `batch.isEmpty` would be a
+  * second job over the batch's input.
   */
 object RollupStream {
 
@@ -60,9 +65,8 @@ object RollupStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
     events.writeStream.outputMode("append").foreachBatch {
       (batch: Dataset[Row], _: Long) =>
-        if (!batch.isEmpty)
-          graft.plans.KmvRoute.maintainRollup(batch.sparkSession,
-            rollupPath, batch.toDF(), k, maxSegments)
+        graft.plans.KmvRoute.maintainRollup(batch.sparkSession,
+          rollupPath, batch.toDF(), k, maxSegments)
     }
 
   /** Per-batch quantile-histogram rollup maintenance: each micro-batch
@@ -89,10 +93,9 @@ object RollupStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
     events.writeStream.outputMode("append").foreachBatch {
       (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.plans.QuantileRoute.maintainRollup(batch.sparkSession,
-            rollupPath, batch.toDF(), (streamId, batchId.toString),
-            maxSegments)
+        graft.plans.QuantileRoute.maintainRollup(batch.sparkSession,
+          rollupPath, batch.toDF(), (streamId, batchId.toString),
+          maxSegments)
     }
 
   /** Per-batch corpus-stats rollup maintenance
@@ -109,9 +112,8 @@ object RollupStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.plans.CorpusRoute.maintainRollup(batch.sparkSession,
-            rollupPath, batch.toDF(), (streamId, batchId.toString),
-            maxSegments)
+        graft.plans.CorpusRoute.maintainRollup(batch.sparkSession,
+          rollupPath, batch.toDF(), (streamId, batchId.toString),
+          maxSegments)
     }
 }

@@ -226,63 +226,171 @@ class LtsRouteSpec extends AnyFunSuite {
     assert(!routed(minuteQuery))
   }
 
-  test("streaming-maintained rollup serves routed queries across a checkpoint restart") {
+  // ---- the streaming maintainer: one input file = one data micro-batch,
+  // each started from the same checkpoint (a restart per phase) ----
+
+  private final class StreamFixture {
     import java.nio.file.Paths
-    import graft.sources.Wire
     val base = Files.createTempDirectory("graft_lts_stream").toString
     val in = s"$base/in"; Files.createDirectory(Paths.get(in))
     val rawP = s"$base/raw"; val ltsP = s"$base/lts"; val ckpt = s"$base/ckpt"
-    def m(min: Int, sec: Int, host: String, v: Double) =
-      f"""{"m":[{"t":"2024-01-01T00:$min%02d:$sec%02dZ","m":"gauge","h":"$host","n":"load.1","v":$v}]}"""
-    val source = () => Wire.metrics(spark.readStream.text(in))
+    val dims = Seq("host", "name")
 
-    // each phase is one file = one data micro-batch; the rows it upserts
-    // are its distinct (minute, host) keys. Its plan must run once: every
-    // input line is read once (not once per envelope key spelling), and
-    // the state store updates each emitted row once.
-    def runPhase(file: String, rows: Seq[(Int, Int, String, Double)]): Unit = {
-      Files.writeString(Paths.get(s"$in/$file"),
-        rows.map { case (mi, s, h, v) => m(mi, s, h, v) + "\n" }.mkString)
-      val q = Ingest.streamLtsRollupTo(source(), ltsP, ckpt, Seq("host", "name"))
+    def line(min: Int, sec: Int, host: String, v: Double): String =
+      f"""{"m":[{"t":"2024-01-01T00:$min%02d:$sec%02dZ","m":"gauge","h":"$host","n":"load.1","v":$v}]}"""
+
+    /** Runs the maintainer over whatever is new under `in` and returns
+      * the query with its progress.
+      */
+    def run(): org.apache.spark.sql.streaming.StreamingQuery = {
+      val q = Ingest.streamLtsRollupTo(
+        graft.sources.Wire.metrics(spark.readStream.text(in)), ltsP, ckpt, dims)
       try q.processAllAvailable() finally q.stop()
+      q
+    }
+
+    def write(file: String, rows: Seq[(Int, Int, String, Double)]): Unit =
+      Files.writeString(Paths.get(s"$in/$file"),
+        rows.map { case (mi, se, h, v) => line(mi, se, h, v) + "\n" }.mkString): Unit
+
+    /** The streamed rows plus `extra` as a raw batch table (Wire
+      * transforms are engine-shared).
+      */
+    def writeRaw(extra: Seq[org.apache.spark.sql.DataFrame]): Unit =
+      (graft.sources.Wire.metrics(spark.read.text(in))
+        .select(col("time"), col("host"), col("name"), col("value")) +: extra)
+        .reduce(_ unionByName _)
+        .write.mode("overwrite").parquet(rawP)
+
+    def minuteQuery = spark.read.parquet(rawP)
+      .groupBy(date_trunc("minute", col("time")).as("bucket"),
+        col("host"), col("name"))
+      .agg(sum(col("value").cast("decimal(18,2)")).as("sv"), count(lit(1)).as("n"))
+
+    def rollupN: Long = {
+      spark.catalog.refreshByPath(ltsP)
+      spark.read.parquet(ltsP).agg(sum(col("n"))).head().getLong(0)
+    }
+
+    /** Routed minute aggregate equals the raw recompute, bit for bit,
+      * and really reads the rollup.
+      */
+    def assertRoutedEqualsRaw(extra: org.apache.spark.sql.DataFrame*): Unit = {
+      writeRaw(extra)
+      val baseline = rows(minuteQuery)
+      assert(baseline.nonEmpty)
+      LtsRoute.enable(spark)
+      LtsRoute.register(spark, rawP, ltsP)
+      try {
+        val q = minuteQuery
+        assert(q.queryExecution.optimizedPlan.collect {
+          case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+            lr.relation match {
+              case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+                h.location.rootPaths.exists(_.toString.contains(ltsP))
+              case _ => false
+            }
+        }.exists(identity), q.queryExecution.optimizedPlan.toString)
+        assert(rows(q) == baseline)
+      } finally LtsRoute.deregister(spark, rawP)
+    }
+
+    /** Parquet files under the rollup's date dirs. */
+    def files(): Seq[java.io.File] =
+      new java.io.File(ltsP).listFiles().toSeq
+        .filter(d => d.isDirectory && d.getName.startsWith("date="))
+        .flatMap(_.listFiles().toSeq).filter(_.getName.endsWith(".parquet"))
+  }
+
+  test("streaming-maintained rollup serves routed queries across a checkpoint restart") {
+    val f = new StreamFixture
+
+    // each phase is one file = one data micro-batch. Its plan must run
+    // once (every input line read once), the stream keeps no state, and
+    // the batch publishes one tagged segment holding exactly its
+    // distinct (minute, host) keys.
+    def runPhase(file: String, rows: Seq[(Int, Int, String, Double)]): Unit = {
+      f.write(file, rows)
+      val q = f.run()
       val data = q.recentProgress.filter(_.numInputRows > 0)
       assert(data.length == 1, data.map(_.json).mkString("\n"))
       assert(data.head.numInputRows == rows.size, data.head.json)
-      assert(data.head.stateOperators(0).numRowsUpdated ==
-        rows.map { case (mi, _, h, _) => (mi, h) }.distinct.size, data.head.json)
+      assert(data.head.stateOperators.isEmpty, data.head.json)
+      val prefix = graft.operators.Artifacts.segPrefix(
+        Some((q.id.toString, data.head.batchId.toString)))
+      val segment = f.files().filter(_.getName.startsWith(prefix))
+      assert(segment.nonEmpty, s"no segment tagged $prefix")
+      val keys = spark.read.parquet(segment.map(_.getPath): _*)
+        .select(minute(col("bucket")), col("host")).collect()
+        .map(r => (r.getInt(0), r.getString(1))).toSeq
+      assert(keys.sorted ==
+        rows.map { case (mi, _, h, _) => (mi, h) }.distinct.sorted)
     }
 
     // phase 1: two rows in minute 0, one in minute 1
     runPhase("a.json", Seq((0, 10, "a", 1.5), (0, 40, "a", 2.25), (1, 5, "b", 4.0)))
 
-    // phase 2 lands while the pipeline is down: a LATE row revising minute
-    // 0's partial sums (the upsert must REPLACE, not append) + a new minute.
-    // Restart from the same checkpoint → aggregate state resumes.
+    // phase 2 lands while the pipeline is down: a LATE row adding to
+    // minute 0 (a second partial beside the first) + a new minute.
+    // Restart from the same checkpoint → the same query id tags it.
     runPhase("b.json", Seq((0, 55, "a", 10.0), (2, 30, "a", 7.0)))
 
-    // the same rows as a raw batch table (Wire transforms are engine-shared)
-    Wire.metrics(spark.read.text(in))
-      .select(col("time"), col("host"), col("name"), col("value"))
-      .write.parquet(rawP)
-    def q = spark.read.parquet(rawP)
-      .groupBy(date_trunc("minute", col("time")).as("bucket"),
-        col("host"), col("name"))
-      .agg(sum(col("value").cast("decimal(18,2)")).as("sv"), count(lit(1)).as("n"))
-    val baseline = rows(q)
-    assert(baseline.nonEmpty)
-    LtsRoute.enable(spark)
-    LtsRoute.register(spark, rawP, ltsP)
-    try {
-      val routedToLts = q.queryExecution.optimizedPlan.collect {
-        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          lr.relation match {
-            case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              h.location.rootPaths.exists(_.toString.contains(ltsP))
-            case _ => false
-          }
-      }.exists(identity)
-      assert(routedToLts, q.queryExecution.optimizedPlan.toString)
-      assert(rows(q) == baseline) // bit-identical: late-row revision upserted
-    } finally LtsRoute.deregister(spark, rawP)
+    f.assertRoutedEqualsRaw() // bit-identical: partials re-aggregate
+  }
+
+  test("a row later than any watermark still reaches the streaming rollup") {
+    val f = new StreamFixture
+    f.write("a.json", Seq((30, 0, "a", 1.0)))
+    f.run()
+    f.write("b.json", Seq((40, 0, "a", 2.0)))
+    f.run()
+    // 35 minutes behind the newest row seen
+    f.write("c.json", Seq((5, 0, "a", 4.0)))
+    f.run()
+    f.writeRaw(Nil)
+    assert(f.rollupN == spark.read.parquet(f.rawP).count())
+    f.assertRoutedEqualsRaw()
+  }
+
+  test("a replayed batch overwrites its own segment; past 8 segments a " +
+      "date dir compacts and still routes bit-identically") {
+    val f = new StreamFixture
+    // end to end: drop the last commit so the restarted query re-runs
+    // batch 0 under the query id its checkpoint persists
+    f.write("a.json", Seq((0, 10, "a", 1.5), (0, 40, "b", 2.25)))
+    f.run()
+    val commit = new java.io.File(s"${f.ckpt}/commits/0")
+    assert(commit.delete())
+    val replay = f.run()
+    assert(replay.recentProgress.exists(p => p.batchId == 0 && p.numInputRows == 2),
+      replay.recentProgress.map(_.json).mkString("\n"))
+    assert(f.rollupN == 2, "the replay double-counted batch 0")
+    assert(f.files().size == 1)
+
+    // the per-batch entry directly, as the stream's own owner: the same
+    // (streamId, batchId) published twice counts once
+    val streamId = replay.id.toString
+    import spark.implicits._
+    def batchOf(i: Int) = Seq(
+      (f"2024-01-01 00:$i%02d:30", "a", i + 0.25),
+      ("2024-01-01 00:00:50", "b", 0.5))
+      .toDF("t", "host", "value")
+      .select(col("t").cast("timestamp").as("time"), col("host"),
+        lit("load.1").as("name"), col("value"))
+    LtsRoute.maintainRollup(f.ltsP, batchOf(1), f.dims, (streamId, "1"))
+    LtsRoute.maintainRollup(f.ltsP, batchOf(1), f.dims, (streamId, "1"))
+    assert(f.rollupN == 4, "the same tag published twice double-counted")
+
+    // ten more batches into the one date dir: past 8 segments the dir
+    // folds through the route's re-merge before the next publish
+    (2 to 11).foreach(i =>
+      LtsRoute.maintainRollup(f.ltsP, batchOf(i), f.dims, (streamId, i.toString)))
+    val segs = f.files()
+    assert(segs.size <= 9, segs.map(_.getName))
+    assert(segs.exists(!_.getName.startsWith("seg-")), "no compacted file")
+    assert(f.rollupN == 24)
+    assert(spark.read.parquet(f.ltsP).schema("sum_value").dataType ==
+      org.apache.spark.sql.types.DecimalType(28, 2))
+    f.assertRoutedEqualsRaw((1 to 11).map(batchOf): _*)
   }
 }
