@@ -96,22 +96,63 @@ object LtsRoute extends Rule[LogicalPlan] {
     * UTC epoch-day, land as ONE tagged segment file per touched `date=`
     * dir through the shared tagged-segment protocol
     * ([[RouteSupport.taggedAppend]]: lease, recover, delete-own-tag,
-    * date-local compaction past `maxSegments`, staged publish,
+    * date-local compaction past 8 segments, staged publish,
     * invalidate). No state store and no rewrite of stored rows: a late
     * row just adds a partial for its minute in a later segment, and the
     * rewrite already re-aggregates partials (`sum(sum_value)`,
     * `sum(n)`), exact for decimal sums, so routed answers stay
     * bit-identical to the raw scan. `tag` = (streamId, batchId) makes a
     * replay of the last uncommitted batch overwrite its own segment.
+    *
+    * One stream feeds a rollup for its whole life: the root's `_stream`
+    * file records the first feeder's streamId, and any other streamId
+    * refuses, whatever the state of the lease. A stream under a fresh
+    * checkpoint re-reads its source from the start, so every re-read
+    * minute would be stored twice while the raw table holds it once.
+    * The check runs before the lease too, so a refused stream never
+    * steals a lapsed lease from the rollup's own stream.
     */
   def maintainRollup(ltsPath: String, metrics: DataFrame, dims: Seq[String],
-      tag: (String, String), maxSegments: Int = 8): Unit = {
+      tag: (String, String)): Unit = {
     import graft.streaming.Ingest
-    RouteSupport.taggedAppend(ltsPath, "date", Some(tag), maxSegments,
-      Ingest.ltsRollup(metrics, dims).withColumn("date", Ingest.utcEpochDay),
-      _ => RouteSupport.compactPartitions(metrics.sparkSession, ltsPath,
-        "date", maxSegments)(remerge),
-      () => invalidate(ltsPath))
+    val (owner, sticky) = graft.operators.Artifacts.leaseIdentity(Some(tag))
+    requireFeeder(ltsPath, tag._1, claim = false)
+    graft.operators.Artifacts.withLease(ltsPath, owner, sticky) {
+      requireFeeder(ltsPath, tag._1, claim = true)
+      RouteSupport.taggedAppend(ltsPath, "date", Some(tag), 8,
+        Ingest.ltsRollup(metrics, dims).withColumn("date", Ingest.utcEpochDay),
+        _ => RouteSupport.compactPartitions(metrics.sparkSession, ltsPath,
+          "date", 8)(remerge),
+        () => invalidate(ltsPath))
+    }
+  }
+
+  /** Refuse unless `streamId` is the rollup's recorded feeder. A root
+    * with no record must hold no rows yet; `claim` (under the lease)
+    * then records `streamId`, by temp file and atomic rename.
+    */
+  private def requireFeeder(ltsPath: String, streamId: String,
+      claim: Boolean): Unit = {
+    val root = new java.io.File(ltsPath)
+    val record = new java.io.File(root, "_stream")
+    graft.operators.Artifacts.parseKvFile(record).flatMap(_.get("stream")) match {
+      case Some(s) => require(s == streamId,
+        s"LTS rollup at $ltsPath is fed by stream '$s', not '$streamId': " +
+          "a stream under a fresh checkpoint re-reads its source and " +
+          "would count every re-read minute twice; restart from the " +
+          "rollup's own checkpoint, or delete the rollup to rebuild it")
+      case None =>
+        require(!Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
+            .exists(f => !f.getName.startsWith("_") && !f.getName.startsWith(".")),
+          s"LTS rollup at $ltsPath holds rows but records no feeding " +
+            "stream; delete it to rebuild it from a stream")
+        if (claim) {
+          val tmp = new java.io.File(root, s".stream-${java.util.UUID.randomUUID()}")
+          java.nio.file.Files.writeString(tmp.toPath, s"stream=$streamId\n")
+          java.nio.file.Files.move(tmp.toPath, record.toPath,
+            java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
+        }
+    }
   }
 
   /** Fold rollup segments to one row per key — every column but the

@@ -184,8 +184,14 @@ object Ingest {
     * counts in the rollup as in the raw table. The tag is (the query id
     * the checkpoint persists, batchId): a restart replays its last
     * uncommitted batch under the same tag, overwriting that segment.
-    * Pinned in LtsRouteSpec across a restart, a late row, a replay and a
-    * compaction.
+    * The query id, not the checkpoint path, names the feeder: a
+    * checkpoint deleted and made again at the same path gets a new query
+    * id, so its stream, which re-reads the whole source, is refused
+    * instead of double-counting. The rollup is bound to the checkpoint
+    * of the stream that first fed it; a stream under any other
+    * checkpoint refuses loudly ([[graft.plans.LtsRoute.maintainRollup]]).
+    * Pinned in LtsRouteSpec across a restart, a late row, a replay, a
+    * compaction and a fresh-checkpoint restart.
     */
   def streamLtsRollupTo(metrics: DataFrame, path: String, checkpoint: String,
       dims: Seq[String]): StreamingQuery = {
@@ -196,6 +202,9 @@ object Ingest {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val queryId = batch.sparkSession.sparkContext.getLocalProperty(
           StreamExecution.QUERY_ID_KEY)
+        require(queryId != null, s"streamLtsRollupTo: no '" +
+          s"${StreamExecution.QUERY_ID_KEY}' local property on the " +
+          "foreachBatch thread, so the batch has no stream id to tag with")
         graft.plans.LtsRoute.maintainRollup(path, batch, dims,
           (queryId, batchId.toString))
       }
@@ -215,58 +224,30 @@ object Ingest {
         s"(scheme '$scheme') — use a local path or a transactional table format")
   }
 
-  /** Parquet-level MERGE for a date-partitioned table: replace rows whose
-    * key appears in `batch`, keep the rest, touching ONLY the date
-    * partitions the batch lands in. `batch` is `localCheckpoint`ed once
-    * and every later step reads that snapshot, so a streaming batch's plan
-    * (and its state-store update) executes exactly once. Against a live
-    * table the merged frame is snapshotted too before the rewrite: the
-    * write replaces the files the plan would otherwise lazily re-read
-    * mid-rewrite.
+  /** Parquet-level MERGE for a date-partitioned table, the commit of
+    * [[streamDownsampleTo]] (its averaged values do not add, so a revised
+    * minute must replace its row): rows whose key appears in `batch`
+    * are replaced, the rest kept, and only the date partitions the batch
+    * lands in are touched. The batch is `localCheckpoint`ed once, so its
+    * plan and state-store update run once; a live table's merged frame is
+    * snapshotted too, because the write replaces the files it reads.
     *
-    * Commits through the shared STAGED-SWAP protocol rather than dynamic
-    * partition overwrite (r14 review — this runs inside a streaming
-    * crash-replay loop): the overwrite's job commit deletes a live date
-    * dir before renaming the staged one in, so a crash between the two
-    * would destroy rows of every series NOT in the replayed batch. Here
-    * the merged dates stage as a dot-prefixed tree, then each date dir
-    * swaps in by aside-rename (existing) or installs by direct rename
-    * (fresh date) — every crash point leaves old files, new files, or a
-    * recoverable aside, healed at the next entry, and the keyed merge
-    * itself is replay-idempotent (left-anti by key + union of the same
-    * revised rows). The routing `date` is the bucket instant's UTC
-    * epoch-day (zone-free by construction).
-    *
-    * The derivation is MECHANICALLY pinned by a `datekey=utc-epoch-day`
-    * line in the table root's `_meta` (r15, closing the r14 ADVICE
-    * gap): a table whose date dirs were written under some OTHER
-    * derivation (a pre-r14 session-zone `to_date(bucket)`) holds the
-    * same bucket key under a different date dir — the merge would read
-    * only the UTC partitions, miss the stored row, and union a
-    * SECOND row, silently double-counting routed sums. An existing
-    * table without the marker therefore refuses loudly; a caller who
-    * knows the layout is already UTC-derived (written by r14 code
-    * before the marker existed) runs [[certifyUtcDateLayout]] once —
-    * it verifies every stored row's dir against the UTC derivation and
-    * stamps the marker mechanically, so nobody ever asserts the layout
-    * by hand.
+    * The merged dates stage as a dot-prefixed tree and each date dir
+    * swaps in by aside-rename (or installs by rename when new), so every
+    * crash point leaves old files, new files or a recoverable aside,
+    * healed at the next entry; the keyed merge itself is
+    * replay-idempotent. The routing `date` is the bucket instant's UTC
+    * epoch-day, pinned by `datekey=utc-epoch-day` in the root's `_meta`:
+    * a table without it may hold keys under session-zone dates, where
+    * the merge would miss the stored row and keep a second one, so it
+    * refuses until [[certifyUtcDateLayout]] has verified and stamped it.
     */
   private[graft] def upsertByKey(batch: DataFrame, path: String,
       keys: Seq[String]): Unit = {
     import graft.operators.Artifacts
     val spark = batch.sparkSession
     requireLocal(path, "upsertByKey")
-    // the routing date is derived from the bucket's INSTANT (UTC epoch
-    // days), never from to_date's session-zone calendar: a maintainer
-    // session restarted under a different spark.sql.session.timeZone
-    // would otherwise place the same bucket key in a DIFFERENT date
-    // partition, miss the existing row in the merge, and double-count
-    // routed sums (review-found, r14 — the requireWriteZone hazard, made
-    // zone-free by construction instead of gated)
-    // the batch plan runs ONCE: every later read (the date list, the
-    // anti-join, the write) reads this snapshot. A streaming batch re-run
-    // here would re-execute its stateful aggregation and update the state
-    // store a second time.
+    // the date list, the anti-join and the write all read this snapshot
     val dated = batch.withColumn("date", utcEpochDay).localCheckpoint(true)
     val dates = dated.select("date").distinct()
       .collect().map(_.getDate(0): Any)
@@ -278,12 +259,8 @@ object Ingest {
       .exists(_.exists(_.getName.startsWith("date=")))
     if (hasLive) requireUtcDateMarker(path)
     else writeDateMarker(path)
-    // null-safe membership (the CorpusRoute lang rule): a null bucket
-    // derives a null date, and `isin(null)` matches NOTHING — the
-    // existing date=__HIVE_DEFAULT_PARTITION__ rows would be excluded
-    // from the merge while the install wholesale-replaces that live dir
-    // with only the batch's null-date rows (r14 ADVICE; shielded today
-    // by non-null window keys, but the helper is generic)
+    // null-safe: `isin(null)` matches nothing, and the install replaces
+    // the whole default-partition dir that null dates land in
     val nonNullDates = dates.filter(_ != null)
     val dateMatch = {
       val base =
@@ -298,10 +275,7 @@ object Ingest {
       else {
         val existing = spark.read.parquet(path).filter(dateMatch)
         val revised = dated.select(keys.map(col): _*)
-        // the anti-join must be null-safe too: a null bucket is a real
-        // stored key (the default partition), and a plain equi-join
-        // would never match it — the union below would then double-keep
-        // the null-keyed row instead of replacing it
+        // null-safe too, or a stored null-keyed row is kept twice
         val sameKey = keys.map(k => existing(k) <=> revised(k))
           .reduce(_ && _)
         existing.join(revised, sameKey, "left_anti")

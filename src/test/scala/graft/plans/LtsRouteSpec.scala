@@ -242,9 +242,9 @@ class LtsRouteSpec extends AnyFunSuite {
     /** Runs the maintainer over whatever is new under `in` and returns
       * the query with its progress.
       */
-    def run(): org.apache.spark.sql.streaming.StreamingQuery = {
+    def run(checkpoint: String = ckpt): org.apache.spark.sql.streaming.StreamingQuery = {
       val q = Ingest.streamLtsRollupTo(
-        graft.sources.Wire.metrics(spark.readStream.text(in)), ltsP, ckpt, dims)
+        graft.sources.Wire.metrics(spark.readStream.text(in)), ltsP, checkpoint, dims)
       try q.processAllAvailable() finally q.stop()
       q
     }
@@ -392,5 +392,25 @@ class LtsRouteSpec extends AnyFunSuite {
     assert(spark.read.parquet(f.ltsP).schema("sum_value").dataType ==
       org.apache.spark.sql.types.DecimalType(28, 2))
     f.assertRoutedEqualsRaw((1 to 11).map(batchOf): _*)
+  }
+
+  test("a stream under a fresh checkpoint refuses to feed another stream's " +
+      "rollup, even once that stream's lease has lapsed") {
+    val f = new StreamFixture
+    f.write("a.json", Seq((0, 10, "a", 1.5), (1, 5, "b", 4.0)))
+    val first = f.run()
+    // the first stream has been down past the lease patience
+    val lease = new java.io.File(s"${f.ltsP}/_lease")
+    assert(lease.setLastModified(0L))
+    // a lost checkpoint: the new query re-reads a.json from the start
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      f.run(s"${f.base}/ckpt-fresh"))
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    assert(msgs.contains(s"is fed by stream '${first.id}'"), msgs)
+    assert(f.rollupN == 2, "the re-read source was counted twice")
+    assert(graft.operators.Artifacts.parseKvFile(lease)
+      .flatMap(_.get("owner")).contains(first.id.toString),
+      "the refused stream took the lease")
   }
 }
