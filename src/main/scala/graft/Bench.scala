@@ -151,9 +151,11 @@ object Bench {
     // metadata) — the complete per-query map lives here even when the
     // driver's captured stream is clipped.
     // redundancy channel only — an unwritable CWD must not fail a run
-    // whose results already printed
+    // whose results already printed. The printed line is rendered first
+    // so the record can carry the key map that line used.
+    val (line, keyMap) = compactLine(total, prepareMs, medians, sfOf(sfDir))
     val fullLine = sidecarLine(total, prepareMs, prepareBreakdown,
-      sfDir, perQuery, loadStart, loadAvg())
+      sfDir, perQuery, loadStart, loadAvg(), keyMap)
     try {
       val out = java.nio.file.Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.out.json"))
@@ -190,7 +192,7 @@ object Bench {
     // min/max (and full names, full precision, sf, iters) live in the
     // sidecar — the printed line spends its ~2000-char budget on the
     // per-query map, which is what the scorecard needs complete
-    println(metricLine(total, prepareMs, medians, sfOf(sfDir)))
+    println(line)
     System.out.flush()
     // the line keeps its shape, but a run with a throwing query fails
     if (failed.nonEmpty) sys.exit(1)
@@ -207,6 +209,9 @@ object Bench {
     * count; a query's own `n` records the widened count where the
     * re-run policy fired. total_min/total_max remain the all-fastest /
     * all-slowest iteration sums — the run's whole-session spread.
+    * `short_names` maps each key of the printed line to its full query
+    * name (`keyMap`, from [[compactLine]]), so a reader joins the line to
+    * `SparkEntry.queries` without re-deriving [[shortNames]].
     */
   /** Numeric scale factor parsed from the data directory name
     * ("…/sf0.1" → "0.1"), or JSON null when the dir is not sf-named.
@@ -218,7 +223,8 @@ object Bench {
   private[graft] def sidecarLine(total: Double, prepareMs: Long,
       prepareBreakdown: Seq[(String, Long)], sfDir: String,
       perQuery: Seq[(String, Seq[Double])],
-      loadStart: Double = -1.0, loadEnd: Double = -1.0): String = {
+      loadStart: Double = -1.0, loadEnd: Double = -1.0,
+      keyMap: Map[String, String] = Map.empty): String = {
     def dp3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val totals = Seq(perQuery.map(_._2.min).sum, perQuery.map(_._2.max).sum)
     // "queries" carries the driver-contract shape — FULL query names to
@@ -236,11 +242,14 @@ object Bench {
           ",\"n\":" + ts.size + "}"
       }
       .mkString("{", ",", "}")
+    val shortQs = keyMap.toSeq.sortBy(_._1)
+      .map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
+      .mkString("{", ",", "}")
     val fullPrep = prepareBreakdown
       .map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     s"""{"metric":"total","value":${dp3(total)},"unit":"sec","sf":${sfOf(sfDir)},""" +
-      s""""queries":$fullQs,"queries_spread":$spreadQs,""" +
+      s""""queries":$fullQs,"queries_spread":$spreadQs,"short_names":$shortQs,""" +
       s""""prepare_ms":$prepareMs,"prepare_breakdown":$fullPrep,""" +
       s""""sf_dir":"$sfDir","iters":$iters,""" +
       s""""noise_rule":"max_over_med>${noiseRatio} and max-med>${noiseFloorSec}s reran to n=${iters + extraIters}; med is the reading",""" +
@@ -256,8 +265,16 @@ object Bench {
     * driver's bounded tail clip the record (the r1-r8 failure mode).
     */
   private[graft] def metricLine(total: Double, prepareMs: Long,
-      medians: Map[String, Double], sfNum: String = "null"): String = {
-    def render(baseLen: Int): String = {
+      medians: Map[String, Double], sfNum: String = "null"): String =
+    compactLine(total, prepareMs, medians, sfNum)._1
+
+  /** [[metricLine]] and the map from each of its keys to the full query
+    * name, at the base the line was rendered with (empty when the line
+    * dropped its per-query map).
+    */
+  private[graft] def compactLine(total: Double, prepareMs: Long,
+      medians: Map[String, Double], sfNum: String): (String, Map[String, String]) = {
+    def render(baseLen: Int): (String, Map[String, String]) = {
       val short = shortNames(medians.keys.toSeq, baseLen)
       val qsMs = medians.toSeq.sortBy(_._1)
         .map { case (k, v) => "\"" + short(k) + "\":" + math.round(v * 1000) }
@@ -268,23 +285,23 @@ object Bench {
       // the head — scalars are the sacrificial end, the per-query map
       // (what the scorecard needs complete) sits last and survives.
       // "sf" (r17): the driver contract's scale-factor scalar
-      s"""{"metric":"total","value":$totalStr,"unit":"sec","sf":$sfNum,""" +
-        s""""prepare_ms":$prepareMs,"queries_ms":$qsMs}"""
+      (s"""{"metric":"total","value":$totalStr,"unit":"sec","sf":$sfNum,""" +
+        s""""prepare_ms":$prepareMs,"queries_ms":$qsMs}""", short.map(_.swap))
     }
     // base-3/2 joined when the 128th query tipped base-4 over budget in
     // the worst case (r14): at tiny bases the collision-extension loop
     // converges on near-minimal unique prefixes, so the map stays
     // present — names keep degrading before data ever drops
     val bases = Seq(10, 8, 6, 4, 3, 2)
-    bases.iterator.map(render).find(_.length <= lineBudget)
+    bases.iterator.map(render).find(_._1.length <= lineBudget)
       // final hard-degrade: if even base-2 names overflow (a query set
       // far past today's), drop the per-query map entirely rather than
       // print a line the driver's bounded tail would clip mid-JSON —
       // a complete scalar record beats a torn detailed one
       .getOrElse {
         val totalStr = "%.3f".formatLocal(java.util.Locale.ROOT, total)
-        s"""{"metric":"total","value":$totalStr,"unit":"sec","sf":$sfNum,""" +
-          s""""prepare_ms":$prepareMs,"queries_ms":{}}"""
+        (s"""{"metric":"total","value":$totalStr,"unit":"sec","sf":$sfNum,""" +
+          s""""prepare_ms":$prepareMs,"queries_ms":{}}""", Map.empty[String, String])
       }
   }
 

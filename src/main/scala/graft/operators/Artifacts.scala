@@ -225,6 +225,23 @@ private[graft] object Artifacts {
       .filter(f => f.isDirectory && f.getName.startsWith(".tmp-stage-"))
       .foreach(rmTree)
 
+  /** Temps older than this are crash orphans: a writer renames its temp
+    * within milliseconds of creating it.
+    */
+  private[graft] val orphanAgeMs: Long = 60L * 60L * 1000L
+
+  /** Delete the files in `dir` that `isTemp` names and that are older
+    * than [[orphanAgeMs]]: temps a crash left between write and rename.
+    * The sweep takes no lock, so the age gate is what keeps it off a
+    * concurrent writer's in-flight temp.
+    */
+  private[graft] def sweepOrphanTemps(dir: File, isTemp: String => Boolean): Unit = {
+    val cutoff = System.currentTimeMillis() - orphanAgeMs
+    Option(dir.listFiles()).getOrElse(Array.empty[File])
+      .filter(f => isTemp(f.getName) && f.lastModified() < cutoff)
+      .foreach(f => f.delete(): Unit)
+  }
+
   /** Swap each staged partition dir over its live sibling atomically
     * (aside-rename chain at PARTITION-DIR grain), then sweep the stage:
     * every crash point leaves each dir whole-old or whole-new (both

@@ -312,18 +312,11 @@ object Ingest {
       .getOrElse(Map.empty[String, String]) - "datekey"
     val lines = (kept.toSeq.sortBy(_._1) :+ ("datekey" -> DateKey))
       .map { case (k, v) => s"$k=$v" }.mkString("", "\n", "\n")
-    // sweep temps orphaned by a crash between write and move (ADVICE
-    // r16). Unlike writeLeaseClaim's `.lease-w-*` sweep this runs with
-    // NO lock, so it must never delete a CONCURRENT writer's in-flight
-    // temp (written milliseconds ago, consumed by its own atomic move)
-    // — age-gate the sweep: only temps old enough that no live call
-    // can still own them are crash orphans
-    val orphanAgeMs = 60L * 60L * 1000L
-    val cutoff = System.currentTimeMillis() - orphanAgeMs
-    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith(".meta-w-") &&
-        f.lastModified() < cutoff)
-      .foreach(f => f.delete(): Unit)
+    // sweep temps orphaned by a crash between write and move; unlike
+    // writeLeaseClaim's `.lease-w-*` sweep this runs with NO lock, hence
+    // the age-gated sweep
+    graft.operators.Artifacts.sweepOrphanTemps(new java.io.File(path),
+      _.startsWith(".meta-w-"))
     val tmp = new java.io.File(path, s".meta-w-${java.util.UUID.randomUUID()}")
     java.nio.file.Files.write(tmp.toPath,
       lines.getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit

@@ -174,4 +174,32 @@ class BenchSpec extends AnyFunSuite {
       "scalars precede the map: the driver keeps the output TAIL, so a " +
         "clipped line loses head scalars, never per-query rows")
   }
+  test("the sidecar's short_names map inverts the printed line's keys and " +
+      "stays stable for the declared query set") {
+    val names = SparkEntry.queries.keys.toSeq
+    val (line, keyMap) = Bench.compactLine(86.43, 123456L, names.map(_ -> 0.816).toMap, "null")
+    val lineKeys = "\"([a-zA-Z0-9_]+)\":816".r.findAllMatchIn(line).map(_.group(1)).toSeq
+    assert(lineKeys.size == names.size && keyMap.keySet == lineKeys.toSet)
+    assert(keyMap.values.toSeq.sorted == names.sorted)
+    // the base the line used (today's 4-char base), whatever the input
+    // order or the medians of the same rendered width
+    assert(keyMap == Bench.shortNames(names, 4).map(_.swap))
+    assert(Bench.compactLine(86.43, 123456L, names.reverse.map(_ -> 0.5).toMap, "null")._2 == keyMap)
+    // the keys are the ones earlier records carry: a change to the query
+    // set or to shortNames that moves any key changes this digest
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(keyMap.toSeq.sorted.map { case (k, v) => s"$k=$v\n" }.mkString
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString.take(16)
+    assert(digest == "a940e4a5d367eb49", digest)
+    // the sidecar carries the map as one JSON object
+    val side = Bench.sidecarLine(86.43, 123456L, Nil, "/root/testdata/sf0.1",
+      names.map(_ -> Seq(0.816)), keyMap = keyMap)
+    val pairs = keyMap.toSeq.sorted.map { case (k, v) => s""""$k":"$v"""" }
+    assert(side.contains(pairs.mkString(""""short_names":{""", ",", "}")), side)
+    assert(side.count(_ == '{') == side.count(_ == '}'))
+    // a line that dropped its per-query map has no keys to map
+    val huge = (0 until 400).map(i => s"q_pathological_growth_case_$i" -> 9.999).toMap
+    assert(Bench.compactLine(3999.6, 999999L, huge, "null")._2.isEmpty)
+  }
 }
