@@ -17,8 +17,9 @@ import org.apache.spark.sql.SparkSession
   * cache generations release ([[IntraQueryCache.releaseBoundary]],
   * outside any timed window). Back-to-back runs let the median ride the
   * query's own warm frames — the number a repeated query (dashboard
-  * refresh, focused QTime) actually sees — while the boundary release
-  * guarantees no query pays for a predecessor's dead cached blocks. The
+  * refresh, a focused single-query rerun) actually sees — while the
+  * boundary release guarantees no query pays for a predecessor's dead
+  * cached blocks. The
   * r1-r10 run-major interleave measured neither regime cleanly: by the
   * time a query's second iteration arrived, 100+ other queries' frames
   * had churned the LRU budget, so cache-reliant medians recorded

@@ -10,10 +10,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and the unified memory manager PROTECTS cached blocks up to
   * `spark.memory.storageFraction` — so left alone these frames
   * accumulate for the JVM lifetime and, in a long multi-query session
-  * (Bench, Verify, ScaleProbe), the dead cached blocks crowd out
-  * EXECUTION memory. Measured: q_ngram_jaccard at the 10× probe scale
-  * degraded ~4× (2.0 s → 14 s median) from spill pressure caused
-  * entirely by EARLIER families' dead caches.
+  * (Bench, Verify), the dead cached blocks crowd out EXECUTION memory.
+  * Measured: q_ngram_jaccard on a 10× corpus degraded ~4× (2.0 s →
+  * 14 s median) from spill pressure caused entirely by EARLIER
+  * families' dead caches (SCALE.md, "Measured scale ratios"; the
+  * budget-bounded release is pinned in IntraQueryCacheSpec).
   *
   * Unconditional release-per-query is the wrong fix: Spark's
   * CacheManager matches persisted plans structurally, so a repeated

@@ -116,9 +116,9 @@ private[graft] object Kmv {
 /** K-minimum-values distinct-count sketch over a 64-bit element-hash
   * column — the [[MinHashAgg]] pattern pointed at cardinality instead of
   * similarity. Originally a measured altitude probe against Spark's
-  * `approx_count_distinct` (HyperLogLog++; the ScaleProbe sketch section
-  * times both — SCALE.md records the verdict, the built-in wins at the
-  * 64-bit tier); the 60-bit md5 tier is the ORACLE face q_distinct_approx
+  * `approx_count_distinct` (HyperLogLog++; SCALE.md's "r6: sketch
+  * altitude" row records the verdict, the built-in wins at the 64-bit
+  * tier); the 60-bit md5 tier is the ORACLE face q_distinct_approx
   * serves — its exact-integer estimator is DuckDB-replayable, so the
   * driver hash-checks the whole sketch.
   *

@@ -101,9 +101,6 @@ private[functions] object TextKernels {
   }
 
   private val space = UTF8String.fromString(" ")
-  private val struct2Fields = StructType(Seq(
-    StructField("h1", LongType, nullable = false),
-    StructField("h2", LongType, nullable = false)))
 
   /** The span family's per-window 128-bit keys — windowOccs' tree:
     * th = xxhash64 per token (null token → the bare seed 42, like the

@@ -528,10 +528,10 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   * fold-of-whens expression form in [[graft.operators.WinnowIndex]]'s
   * sharding (`Σ when(fp >= bound, 1)`), which builds an O(shards)-node
   * left-deep tree: fine at 64 shards, but a production-width cut
-  * (hundreds to thousands of shards — the r11 `ScaleProbe
-  * --winnow-index` 512-shard row) overflows Catalyst's recursive
-  * analysis/codegen on the ~2·shards-node chain, and even when it
-  * survives, evaluation is O(shards) per row vs O(log shards) here.
+  * (hundreds to thousands of shards — SCALE.md's exact-dedup 512-shard
+  * row) overflows Catalyst's recursive analysis/codegen on the
+  * ~2·shards-node chain, and even when it survives, evaluation is
+  * O(shards) per row vs O(log shards) here.
   * Bounds MUST be sorted non-decreasing (the manifest validation's
   * contract); duplicates are fine — upper-bound search counts them all,
   * exactly like the fold.
@@ -665,11 +665,6 @@ case class EqCountLong(left: Expression, right: Expression)
 /** Registration + column API for the graft native functions. */
 object VectorFunctions {
   val dotName = "vec_dot"
-
-  private val dotInfo = new ExpressionInfo(
-    classOf[DotProduct].getName, null, dotName,
-    "_FUNC_(a, b) - dot product of two float/double arrays in double precision.",
-    "")
 
   private val dotBuilder: Seq[Expression] => Expression = {
     case Seq(a, b) => DotProduct(a, b)

@@ -146,9 +146,8 @@ object EventOps {
     * admit set, tie handling, both count regimes — against a DuckDB
     * replay. At 100 TB this shape replaces the exact distinct: a
     * ≤ 8·k-byte buffer per (partition, day) moves, never user ids; the
-    * production-tier alternative stays measured in ScaleProbe's sketch
-    * altitude probe (xxhash64 KMV vs built-in HLL — the built-in wins,
-    * SCALE.md).
+    * production-tier comparison (xxhash64 KMV vs built-in HLL — the
+    * built-in wins) is SCALE.md's "r6: sketch altitude" row.
     */
   def distinctApprox(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorFunctions.ensureRegistered(spark)

@@ -571,12 +571,12 @@ object TextOps {
     */
   def qualitySurvivor(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    qualitySurvivorOver(spark, docs,
+    qualitySurvivorOver(docs,
       tokenJaccardPairs(spark, dir).select("doc_a", "doc_b"))
   }
 
-  private[operators] def qualitySurvivorOver(spark: SparkSession,
-      docs: DataFrame, pairs: DataFrame): DataFrame = {
+  private[operators] def qualitySurvivorOver(docs: DataFrame,
+      pairs: DataFrame): DataFrame = {
     graft.IntraQueryCache.newGeneration(
       s"survivor:${docs.queryExecution.analyzed.semanticHash()}")
     val clusters = clusterPairs(docs.select(col("doc_id")), pairs, 20)
@@ -1786,12 +1786,13 @@ object TextOps {
     * generation-scoped — an eviction-then-recompute mid-query could
     * re-assign `spark_partition_id`, so the LRU budget must never touch
     * them. Left alone, though, each distinct INPUT pinned its own
-    * corpus-sized snapshot for the session (measured leak class:
-    * ScaleProbe's x1/x10/x30 dirs → three pinned corpora). At most TWO
-    * live snapshots per FAMILY instead (see [[pinnedSnapshots]] for why
-    * two): registering a third distinct plan under a family releases the
-    * oldest; a same-plan re-registration keeps the warm blocks
-    * (CacheManager dedupes the persist).
+    * corpus-sized snapshot for the session (measured leak class: three
+    * scale-tier datasets → three pinned corpora, SCALE.md's
+    * pinned-snapshot row). At most TWO live snapshots per FAMILY instead
+    * (see [[pinnedSnapshots]] for why two): registering a third distinct
+    * plan under a family releases the oldest; a same-plan
+    * re-registration keeps the warm blocks (CacheManager dedupes the
+    * persist).
     */
   /** MRU-first, at most TWO live snapshots per family. Two, not one: a
     * released snapshot is unsafe for any STILL-UNCONSUMED frame built
@@ -1801,8 +1802,8 @@ object TextOps {
     * most recent makes the common interleave (build the next dataset's
     * plan, then consume the previous one's) safe; releasing the
     * third-oldest requires building plans over THREE inputs before
-    * consuming the first — outside every in-repo driver (Bench/Verify/
-    * ScaleProbe run build-then-consume sequentially), and documented as
+    * consuming the first — outside every in-repo driver (Bench and
+    * Verify run build-then-consume sequentially), and documented as
     * this registry's contract for library callers.
     */
   private val pinnedSnapshots =
@@ -1855,9 +1856,11 @@ object TextOps {
     * snapshot registry: (family, live snapshots, persisted bytes
     * memory+disk). The observability face of the keep-2 release
     * machinery — the multi-GB-per-stale-dataset class it exists to
-    * prevent becomes a probe row (`ScaleProbe --pinned`) instead of an
-    * archaeology session; a regression shows up as a family whose bytes
-    * GROW with datasets instead of plateauing at two corpora.
+    * prevent becomes a report row instead of an archaeology session: a
+    * family plateaus at two corpora however many datasets a session
+    * touches (SCALE.md's pinned-snapshot row; release-on-supersede is
+    * pinned in IntraQueryCacheSpec), so a regression shows up as a
+    * family whose bytes GROW with datasets.
     */
   private[graft] def pinnedStorageReport(
       spark: SparkSession): Seq[(String, Int, Long)] = {
@@ -3488,8 +3491,8 @@ object TextOps {
     * so the right plan here is the full fps read; the range-PRUNED
     * membership read ([[WinnowIndex.membershipFps]]) is the
     * GATE-sized-probe serving path (micro-batch against a huge corpus),
-    * plan-pinned in PlanSpec and measured in `ScaleProbe
-    * --winnow-index`. The index build is ingest-time
+    * plan-pinned in PlanSpec, its touched-bytes fraction recorded in
+    * SCALE.md's exact-dedup winnow rows. The index build is ingest-time
     * ([[SparkEntry.prepare]]); query time reads the fingerprint set.
     */
   def winnowMatchIndexed(spark: SparkSession, dir: String, k: Int = 3,
@@ -3512,13 +3515,13 @@ object TextOps {
     * corpus" shape) winnows to a handful of fingerprints whose distinct
     * ranges cover FAR fewer than the 64 shards, so
     * [[WinnowIndex.membershipFps]]'s partition-pruned read touches only
-    * those dirs (plan-pinned in PlanSpec; bytes measured in `ScaleProbe
-    * --winnow-index`). The corpus-sized probe (q_winnow_match_indexed)
-    * deliberately keeps the full fps read — pruning pays below ~half
-    * the shards (SCALE.md's r10 measurement); this row is the other
-    * side of that turn, oracle-checked against a raw recompute in
-    * DuckDB so the PRUNED serving path carries the same standing
-    * consistency proof as the full-read one.
+    * those dirs (plan-pinned in PlanSpec; touched bytes recorded in
+    * SCALE.md's exact-dedup winnow rows). The corpus-sized probe
+    * (q_winnow_match_indexed) deliberately keeps the full fps read —
+    * pruning pays below ~half the shards (SCALE.md's r10 measurement);
+    * this row is the other side of that turn, oracle-checked against a
+    * raw recompute in DuckDB so the PRUNED serving path carries the same
+    * standing consistency proof as the full-read one.
     */
   def winnowSnippet(spark: SparkSession, dir: String, k: Int = 3,
       w: Int = 4, nTokens: Int = 12, maxDocId: Long = 12): DataFrame = {

@@ -727,10 +727,11 @@ object VectorOps {
     * volume (¼ of it, floor 50, cap 2048). The floor is not enough by
     * itself when the corpus holds large NEAR-DUPLICATE clusters: cluster
     * members quantize to the same codes, ADC cannot order inside the tie,
-    * and a fixed pool keeps an arbitrary subset (measured in ScaleProbe:
-    * recall 0.14 with pool 50 against ~300-member clusters, restored by
-    * the scaled pool). Production pipelines dedup embeddings BEFORE
-    * indexing ([[embedClusters]]) precisely to keep such clusters out.
+    * and a fixed pool keeps an arbitrary subset (SCALE.md's ANN row under
+    * "Measured scale ratios": recall 0.14 with pool 50 against
+    * ~300-member clusters, restored by the scaled pool). Production
+    * pipelines dedup embeddings BEFORE indexing ([[embedClusters]])
+    * precisely to keep such clusters out.
     */
   def annPq(spark: SparkSession, dir: String, nProbe: Int = 0,
       rerank: Int = 0): DataFrame = {
@@ -846,8 +847,8 @@ object VectorOps {
     * by (xxhash64(nid), nid) — nid tie-break keeps it total even on
     * hash collisions) is IDENTICAL to the single-window form: index
     * builds stay bit-reproducible (spec-pinned), recall floors
-    * untouched. Probe row: `ScaleProbe --lsh-skew` plants the
-    * degenerate corpus and compares build cost against uniform.
+    * untouched. SCALE.md's embedding-similarity row records the build
+    * on a 30%-degenerate corpus flat against uniform.
     */
   private[graft] def lshIndex(emb: DataFrame, maxBucket: Int, bits: Int = 8): DataFrame =
     capBuckets(lshEntries(emb, bits), maxBucket)

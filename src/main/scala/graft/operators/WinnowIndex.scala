@@ -75,10 +75,10 @@ object WinnowIndex {
     * observable at spec scale; production sizes this so a shard stays a
     * few GB (thousands at 100 TB). The count is a BUILD parameter since
     * r11 — recorded in the manifest, which every reader and maintainer
-    * treats as the sole authority (so an artifact built at any width
-    * serves and compacts correctly, and `ScaleProbe --winnow-index` can
-    * MEASURE the pruning fraction at a production-like width instead of
-    * asserting it).
+    * treats as the sole authority, so an artifact built at any width
+    * serves, prunes and compacts correctly (pinned at 512 shards in
+    * WinnowIndexSpec; the measured pruning fraction at that width is
+    * SCALE.md's exact-dedup 512-shard row).
     */
   private[operators] val shardCount = 64
 

@@ -383,7 +383,10 @@ object Retention {
   import java.time.LocalDate
 
   /** Delete `date=YYYY-MM-DD` partition dirs older than `maxAgeDays` before
-    * `today`. Returns the dropped partition names.
+    * `today`. Returns the partition names actually deleted. When the table
+    * is an LTS route target, its cached relation is dropped too, so the
+    * next routed query lists the surviving files instead of reading the
+    * deleted ones.
     */
   def dropExpired(spark: SparkSession, tablePath: String, maxAgeDays: Int,
       today: LocalDate): Seq[String] = {
@@ -392,13 +395,16 @@ object Retention {
     val base = new org.apache.hadoop.fs.Path(tablePath)
     if (!fs.exists(base)) return Nil
     val cutoff = today.minusDays(maxAgeDays.toLong)
-    fs.listStatus(base).toSeq
+    val dropped = fs.listStatus(base).toSeq
       .map(_.getPath)
       .filter(_.getName.startsWith("date="))
       .filter { p =>
         scala.util.Try(LocalDate.parse(p.getName.stripPrefix("date=")))
           .toOption.exists(_.isBefore(cutoff))
       }
-      .map { p => fs.delete(p, true); p.getName }
+      .filter(fs.delete(_, true))
+      .map(_.getName)
+    graft.plans.LtsRoute.invalidate(tablePath)
+    dropped
   }
 }

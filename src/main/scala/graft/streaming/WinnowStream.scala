@@ -142,9 +142,9 @@ object WinnowStream {
     * the scale the refresh-snapshot model stops fitting: the full
     * fingerprint set of a 100 TB corpus is itself huge, while a
     * micro-batch of paste-sized probes touches a handful of shard
-    * ranges (measured 8% of bytes at 512 shards, `ScaleProbe
-    * --winnow-index`; the batch face is the oracle-checked
-    * q_winnow_snippet). Trade against the refreshing sibling: every
+    * ranges (8% of bytes at 512 shards — SCALE.md's exact-dedup 512-shard
+    * row; the pruned scan is plan-pinned in PlanSpec and the batch face
+    * is the oracle-checked q_winnow_snippet). Trade against the refreshing sibling: every
     * batch re-reads its ranges from disk (no warm snapshot), so for
     * LARGE batches against a SMALL corpus the refresh model wins —
     * pruning pays when probe ranges ≪ shard count, the r10 turn.

@@ -56,6 +56,8 @@ class AnnServingSpec extends AnyFunSuite {
       .select("nid", "cid", "codes").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Int](2))).toSet
     assert(got.nonEmpty && got === want)
+    // the chain really compacted: one file per populated list dir
+    assert(AnnServing.segments(root) == 1)
   }
 
   test("appends are replay-idempotent by value; list-local compaction " +

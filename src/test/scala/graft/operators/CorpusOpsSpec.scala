@@ -289,7 +289,7 @@ class CorpusOpsSpec extends AnyFunSuite {
       (60L, "solo doc here words"), (70L, null: String))
       .toDF("doc_id", "text")
     val pairs = Seq((10L, 20L), (10L, 30L), (40L, 50L)).toDF("doc_a", "doc_b")
-    val got = TextOps.qualitySurvivorOver(spark, docs, pairs).collect()
+    val got = TextOps.qualitySurvivorOver(docs, pairs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
     val expect = Seq(
       (10L, 20L, false), (20L, 20L, true), (30L, 20L, false),

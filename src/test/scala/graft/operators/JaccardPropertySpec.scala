@@ -130,7 +130,6 @@ class JaccardPropertySpec extends AnyFunSuite {
     * and threshold-edge subsets.
     */
   private def containCorpus(seed: Long): Seq[(Long, String)] = {
-    val rnd = new scala.util.Random(seed)
     val base = corpus(seed)
     val excerpts = base.take(6).map { case (id, t) =>
       val toks = t.split(" ").toSeq.distinct

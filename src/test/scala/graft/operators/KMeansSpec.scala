@@ -60,14 +60,14 @@ class KMeansSpec extends AnyFunSuite {
   }
 
   test("fitted centroids hash-pin on a fixed synthetic corpus") {
-    // the synthetic corpus is a pure function of the id (ScaleProbe's
+    // the synthetic corpus is a pure function of the id (SynthVectors'
     // deterministic generator), so the full fit — md5-60bit init, three
     // Lloyd rounds in exact int64, floor-div rounding — must reproduce
     // these exact centroids on any run; a drifting hash means the
     // ITERATION changed, which would silently break the unrolled-CTE
     // DuckDB oracle's equivalence with the operator
     import spark.implicits._
-    val emb = spark.range(0, 300).map(i => graft.ScaleProbe.synthVec(i))
+    val emb = spark.range(0, 300).map(i => graft.SynthVectors.synthVec(i))
       .toDF("vec_id", "embedding", "label")
     val (cents, out) = VectorOps.kmeansFitOver(emb, k = 4, iters = 3,
       "spec-kmeans-pin")
@@ -89,7 +89,7 @@ class KMeansSpec extends AnyFunSuite {
     // q_ann_pq_exactsig's unrolled-CTE oracle equivalence)
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val emb = spark.range(0, 300).map(i => graft.ScaleProbe.synthVec(i))
+    val emb = spark.range(0, 300).map(i => graft.SynthVectors.synthVec(i))
       .toDF("vec_id", "embedding", "label")
     // the operator's OWN quantization expression — the pin must guard
     // the production unit, not a hand-inlined copy that could drift

@@ -252,14 +252,14 @@ class VectorOpsSpec extends AnyFunSuite {
   }
 
   test("knn join finds planted high-cosine neighbors (recall >= 0.9) and ranks correctly") {
-    // strong-neighbor corpus (the ScaleProbe ANN recipe): every 13th
+    // strong-neighbor corpus (the SynthVectors recipe): every 13th
     // vector is a noised copy of one of five bases — those planted pairs
     // sit at high cosine, the regime the kNN graph exists to catch
     val tmp = java.nio.file.Files.createTempDirectory("graft-knn").toString
     val n = 2000
     locally {
       import graft.TestSpark.spark.implicits._
-      (0 until n).map(i => graft.ScaleProbe.synthVec(i.toLong))
+      (0 until n).map(i => graft.SynthVectors.synthVec(i.toLong))
         .toDF("vec_id", "embedding", "label")
         .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
     }
@@ -275,7 +275,7 @@ class VectorOpsSpec extends AnyFunSuite {
     }
     // recall on the planted vectors: their true nearest neighbor
     // (driver-recomputed brute force) must appear in the top-3
-    val vecs = (0 until n).map(i => graft.ScaleProbe.synthVec(i.toLong))
+    val vecs = (0 until n).map(i => graft.SynthVectors.synthVec(i.toLong))
       .map(v => v.vec_id -> v.embedding).toMap
     def cos(a: Array[Float], b: Array[Float]): Double = {
       def d(x: Array[Float], y: Array[Float]) = {

@@ -36,12 +36,13 @@ class LtsRouteSpec extends AnyFunSuite {
   private def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
     df.collect().map(_.toString).toSet
 
-  private def routed(df: org.apache.spark.sql.DataFrame): Boolean =
+  private def routed(df: org.apache.spark.sql.DataFrame,
+      lts: String = ltsPath): Boolean =
     df.queryExecution.optimizedPlan.collect {
       case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         lr.relation match {
           case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.location.rootPaths.exists(_.toString.contains(ltsPath))
+            h.location.rootPaths.exists(_.toString.contains(lts))
           case _ => false
         }
     }.exists(identity)
@@ -219,6 +220,45 @@ class LtsRouteSpec extends AnyFunSuite {
       graft.streaming.Ingest.certifyUtcDateLayout(spark, legacy)
     }
     assert(bad.getMessage.contains("rebuild"))
+  }
+
+  test("a retention drop on a routed rollup invalidates its cached " +
+      "relation: the routed answer equals the raw recompute over the " +
+      "dates that remain") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_lts_ttl").toString
+    val (rawP, ltsP) = (s"$base/raw", s"$base/lts")
+    val metrics = Seq(
+      ("2024-01-01 00:00:10", "a", 1.5), ("2024-01-01 00:01:20", "b", 2.25),
+      ("2024-01-02 00:00:30", "a", 4.0), ("2024-01-03 00:02:00", "b", 7.0))
+      .toDF("t", "host", "value")
+      .select(col("t").cast("timestamp").as("time"), col("host"),
+        col("value"))
+    metrics.withColumn("date", to_date(col("time")))
+      .write.partitionBy("date").parquet(rawP)
+    Ingest.ltsRollup(metrics, Seq("host"))
+      .withColumn("date", Ingest.utcEpochDay)
+      .write.partitionBy("date").parquet(ltsP)
+    def q = spark.read.parquet(rawP)
+      .groupBy(date_trunc("minute", col("time")).as("bucket"), col("host"))
+      .agg(sum(col("value").cast("decimal(18,2)")).as("sv"),
+        count(lit(1)).as("n"))
+    LtsRoute.enable(spark)
+    LtsRoute.register(spark, rawP, ltsP)
+    try {
+      // the first routed query caches the rollup's relation
+      assert(routed(q, ltsP) && rows(q).size == 4)
+      val today = java.time.LocalDate.parse("2024-02-01")
+      for (p <- Seq(rawP, ltsP))
+        assert(graft.streaming.Retention.dropExpired(spark, p, 30, today) ==
+          Seq("date=2024-01-01"))
+      val routedRows = rows(q)
+      assert(routed(q, ltsP))
+      LtsRoute.deregister(spark, rawP)
+      assert(!routed(q, ltsP))
+      val raw = rows(q)
+      assert(raw.size == 2 && routedRows == raw)
+    } finally LtsRoute.deregister(spark, rawP)
   }
 
   test("unregistered tables never route") {

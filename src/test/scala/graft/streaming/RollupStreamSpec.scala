@@ -53,6 +53,9 @@ class RollupStreamSpec extends AnyFunSuite {
       incoming.grouped(2).foreach { slice =>
         mem.addData(slice: _*)
         q.processAllAvailable()
+        // the maintainer's bound: one append past maxSegments at most
+        assert(graft.plans.QuantileRoute.rollupSegments(roll) <= 2,
+          s"segment bound violated: ${graft.plans.QuantileRoute.rollupSegments(roll)}")
       }
     } finally q.stop()
 

@@ -277,10 +277,14 @@ class TextIndexStreamSpec extends AnyFunSuite {
     // would hold ~7 files (base + one per append); the bound must hold
     // after every batch and serving must stay exact across compactions
     val maxSegments = 3
-    for (r <- 1 to 6)
+    for (r <- 1 to 6) {
       TextIndexStream.appendBatch(streamed,
         docs.filter(col("doc_id") % 7 === r), id = r.toLong,
         maxSegments = maxSegments)
+      assert(TextIndex.postingsSegments(streamed) <= maxSegments + 1,
+        s"segment bound violated after batch $r: " +
+          TextIndex.postingsSegments(streamed))
+    }
     assert(TextIndex.postingsSegments(streamed) <= maxSegments,
       s"segment bound violated: ${TextIndex.postingsSegments(streamed)}")
     val wl = TextOps.bm25Queries

@@ -125,6 +125,8 @@ class WinnowStreamSpec extends AnyFunSuite {
       rest.grouped(math.max(1, rest.size / 6)).foreach { g =>
         mem.addData(g: _*)
         q.processAllAvailable()
+        assert(WinnowIndex.segments(root) <= maxSegments + 1,
+          s"segment bound violated: ${WinnowIndex.segments(root)}")
       }
     } finally q.stop()
     assert(WinnowIndex.segments(root) <= maxSegments,
