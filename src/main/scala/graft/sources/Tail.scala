@@ -51,12 +51,22 @@ object Webhook {
   */
 object WireWriter {
 
+  /** One metric as a wire record (short keys); `t` stays a timestamp until
+    * [[json]] renders it.
+    */
+  private def record: Column = struct(
+    col("time").as("t"), col("type").as("m"), col("host").as("h"),
+    col("name").as("n"), col("value").as("v"), col("tags").as("g"))
+
+  /** RFC3339 with µs, rendered in UTC whatever the session zone, so the
+    * `Z` suffix is true and [[Wire]] reads back the same instant.
+    */
+  private def json(c: Column): Column = to_json(c, Map(
+    "timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'", "timeZone" -> "UTC"))
+
   /** Metrics → wire JSON objects (one per record, short keys). */
   def metricJson(metrics: DataFrame): DataFrame =
-    metrics.select(to_json(struct(
-      date_format(col("time"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'").as("t"),
-      col("type").as("m"), col("host").as("h"), col("name").as("n"),
-      col("value").as("v"), col("tags").as("g"))).as("value"))
+    metrics.select(json(record).as("value"))
 
   /** Group records into `Batch` envelopes of at most `maxPerBatch` metrics
     * (the agent's flush threshold, ref: cmd/yamon-agent/main.go:47).
@@ -65,14 +75,11 @@ object WireWriter {
     */
   def envelopes(metrics: DataFrame, maxPerBatch: Int = 4000): DataFrame =
     metrics
-      .withColumn("m", struct(
-        date_format(col("time"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'").as("t"),
-        col("type").as("m"), col("host").as("h"), col("name").as("n"),
-        col("value").as("v"), col("tags").as("g")))
+      .withColumn("m", record)
       .withColumn("pid", spark_partition_id())
       .withColumn("grp",
         floor((monotonically_increasing_id() % (1L << 33)) / maxPerBatch))
       .groupBy("pid", "grp")
       .agg(collect_list(col("m")).as("m"))
-      .select(to_json(struct(col("m"))).as("value"))
+      .select(json(struct(col("m"))).as("value"))
 }

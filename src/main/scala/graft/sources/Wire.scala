@@ -1,7 +1,12 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, classic}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedAttribute}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import graft.functions.{WireDecode, WireLayout}
 import graft.model.Schemas
 import graft.operators.Enrich
 
@@ -10,21 +15,21 @@ import graft.operators.Enrich
   * ref: common/batch.go:3-7, FIXTURES.md §B1) → the three canonical record
   * streams. Works identically on batch and streaming DataFrames — this is
   * the S23 ingestion boundary (`POST /v1/submit-batch`,
-  * ref: forward_server.go:58-79).
+  * ref: forward_server.go:58-79). Times are RFC3339Nano strings (ref: Go
+  * time.Time JSON encoding) read by a TRY-mode cast to timestamp under the
+  * session zone; nanosecond digits beyond Spark's µs are truncated
+  * (SURVEY.md §1.4).
   *
-  * Malformed JSON yields a null struct from `from_json` and the record is
+  * Invariant: each parser scans its input once and decodes each envelope
+  * once, in one [[graft.functions.WireDecode]] generator (pinned in
+  * WireSpec). A canonical envelope is tokenized once by a Jackson
+  * streaming parser; any other line goes whole to
+  * `from_json(line, Schemas.wireBatch)`, whose PERMISSIVE semantics stay
+  * the reference: malformed JSON yields a null struct and its records are
   * dropped, mirroring the reference's decode-and-reject behavior
   * (ref: forward_server.go:58-63) without failing the stream.
-  *
-  * Invariant: each parser evaluates an envelope's JSON once — its plan
-  * holds one scan of the input and one `from_json` (pinned in WireSpec).
   */
 object Wire {
-
-  /** RFC3339Nano strings (ref: Go time.Time JSON encoding); nanosecond
-    * digits beyond Spark's µs are truncated (SURVEY.md §1.4).
-    */
-  private[sources] def parseTime(c: Column): Column = c.try_cast("timestamp")
 
   /** S23 auth gate (ref: forward_server.go:38-56): each envelope row
     * carries its transport `Authorization` value in `authColumn` as
@@ -47,60 +52,41 @@ object Wire {
       .filter(ok)
   }
 
-  /** One record column per envelope row: the short (server submit-batch)
-    * and long (agent /v1/data) key spellings are both valid and parse
-    * identically, so records under either key are concatenated — neither
-    * spelling can shadow the other when a producer sends both. Malformed
-    * JSON or an envelope without either key yields an empty array and
-    * explodes to nothing; a separate null filter would be pushed below
-    * the project by Catalyst and evaluate `from_json` a second time.
+  /** One decode per envelope row, emitting `layout`'s final rows: the
+    * short (server submit-batch) and long (agent /v1/data) key spellings
+    * are both valid and parse identically, so records under the short key
+    * come first, then those under the long key — neither spelling can
+    * shadow the other when a producer sends both. The session time zone is
+    * bound here, as analysis binds it for a `Cast`.
     */
-  private def records(jsonLines: DataFrame, column: String, short: String,
-      long: String): DataFrame =
-    jsonLines.select(from_json(col(column), Schemas.wireBatch).as("b"))
-      .select(explode(concat(
-        coalesce(col(s"b.$short"), array()),
-        coalesce(col(s"b.$long"), array()))).as("r"))
+  private def records(jsonLines: DataFrame, column: String, layout: WireLayout): DataFrame = {
+    val spark = jsonLines.sparkSession.asInstanceOf[classic.SparkSession]
+    val zone = spark.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key)
+    val decode = WireDecode(UnresolvedAttribute.quotedString(column), layout, zone)
+    new classic.Dataset[Row](spark,
+      Project(Seq(UnresolvedAlias(decode)), jsonLines.queryExecution.analyzed),
+      ExpressionEncoder(layout.output))
+  }
 
   /** Metric stream: only `gauge`/`counter` survive — any other type is
     * dropped, the *intended* semantics of the reference's script decode
     * (ref: script.go:29-38 leaves other types nil; we do not replicate the
-    * nil-deref, SURVEY.md §7.4).
+    * nil-deref, SURVEY.md §7.4). Rows need a parseable time and a name.
     */
   def metrics(jsonLines: DataFrame, column: String = "value"): DataFrame =
-    records(jsonLines, column, "m", "metrics")
-      .select(
-        parseTime(col("r.t")).as("time"),
-        col("r.m").as("type"),
-        coalesce(col("r.h"), lit("")).as("host"),
-        col("r.n").as("name"),
-        col("r.v").as("value"),
-        Enrich.normTags(col("r.g")).as("tags"))
-      .filter(col("time").isNotNull && col("name").isNotNull &&
-        col("type").isin("gauge", "counter"))
+    records(jsonLines, column, WireLayout.Metrics)
 
-  /** Log stream; absent level defaults to "" (ref: common/log.go:21). */
+  /** Log stream; absent level defaults to "" (ref: common/log.go:21).
+    * Rows need a parseable time and a service.
+    */
   def logs(jsonLines: DataFrame, column: String = "value"): DataFrame =
-    records(jsonLines, column, "l", "logs")
-      .select(
-        parseTime(col("r.t")).as("time"),
-        coalesce(col("r.h"), lit("")).as("host"),
-        col("r.s").as("service"),
-        coalesce(col("r.l"), lit("")).as("level"),
-        coalesce(col("r.d"), lit("")).as("data"),
-        Enrich.normTags(col("r.g")).as("tags"))
-      .filter(col("time").isNotNull && col("service").isNotNull)
+    records(jsonLines, column, WireLayout.Logs)
 
-  /** Event stream (ref: common/event.go:8-14). */
+  /** Event stream (ref: common/event.go:8-14); rows need a parseable time
+    * and a type.
+    */
   def events(jsonLines: DataFrame, column: String = "value"): DataFrame =
-    records(jsonLines, column, "e", "events")
-      .select(
-        parseTime(col("r.t")).as("time"),
-        coalesce(col("r.h"), lit("")).as("host"),
-        col("r.e").as("type"),
-        coalesce(col("r.d"), lit("")).as("data"),
-        Enrich.normTags(col("r.g")).as("tags"))
-      .filter(col("time").isNotNull && col("type").isNotNull)
+    records(jsonLines, column, WireLayout.Events)
 }
 
 /** Parser for script stdout documents (`ScriptResult`, ref: script.go:77-86,
@@ -108,6 +94,10 @@ object Wire {
   * unix-seconds `time` override; records without a time use the supplied
   * collection time (the reference stamps time.Now at parse,
   * ref: script.go:35-37).
+  *
+  * Script output is a collector's stdout, a few documents per run, so these
+  * parsers stay on `from_json` + `explode`: there is no hot path that
+  * [[Wire]]'s streaming decode would pay for.
   *
   * NOTE divergence from the reference, by design (SURVEY.md §7.4): the
   * streaming-script path actually *emits* parsed records (the reference

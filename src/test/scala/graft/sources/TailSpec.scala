@@ -32,18 +32,26 @@ class TailSpec extends AnyFunSuite {
   }
 
   test("wire round-trip: serialize envelopes → Wire.metrics parses back identical") {
-    val src = Seq(
-      ("2024-01-01T00:00:10.000000Z", "gauge", "a", "load.1", 0.5, Map("env" -> "p")),
-      ("2024-01-01T00:00:20.500000Z", "counter", "b", "net.rx", 100.0, Map[String, String]()))
-      .toDF("t", "type", "host", "name", "value", "tags")
-      .withColumn("time", col("t").cast("timestamp")).drop("t")
-    val envelopes = WireWriter.envelopes(src, maxPerBatch = 10)
-    assert(envelopes.count() >= 1)
-    val back = Wire.metrics(envelopes)
-      .orderBy("host")
-      .select("time", "type", "host", "name", "value", "tags")
-    val orig = src.orderBy("host").select("time", "type", "host", "name", "value", "tags")
-    assert(back.collect().toSeq.map(_.toSeq) == orig.collect().toSeq.map(_.toSeq))
+    // the session zone must not shift the instant: `Z` means UTC
+    val zoneKey = "spark.sql.session.timeZone"
+    val saved = spark.conf.get(zoneKey)
+    try Seq("UTC", "America/Los_Angeles").foreach { zone =>
+      spark.conf.set(zoneKey, zone)
+      val src = Seq(
+        ("2024-01-01T00:00:10.000000Z", "gauge", "a", "load.1", 0.5, Map("env" -> "p")),
+        ("2024-01-01T00:00:20.500000Z", "counter", "b", "net.rx", 100.0, Map[String, String]()))
+        .toDF("t", "type", "host", "name", "value", "tags")
+        .withColumn("time", col("t").cast("timestamp")).drop("t")
+      val envelopes = WireWriter.envelopes(src, maxPerBatch = 10)
+      assert(envelopes.count() >= 1)
+      val back = Wire.metrics(envelopes)
+        .orderBy("host")
+        .select("time", "type", "host", "name", "value", "tags")
+      val orig = src.orderBy("host").select("time", "type", "host", "name", "value", "tags")
+      assert(back.collect().toSeq.map(_.toSeq) == orig.collect().toSeq.map(_.toSeq), zone)
+      assert(WireWriter.metricJson(src.filter(col("host") === "a")).as[String].head()
+        .contains("\"t\":\"2024-01-01T00:00:10.000000Z\""), zone)
+    } finally spark.conf.set(zoneKey, saved)
   }
 
   test("envelope size bound holds") {

@@ -68,16 +68,20 @@ class WireSpec extends AnyFunSuite {
 
   test("each parser scans its input once and evaluates the envelope JSON once") {
     import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import graft.functions.WireDecode
     val dir = java.nio.file.Files.createTempDirectory("graft_wire_plan")
     java.nio.file.Files.writeString(dir.resolve("a.json"), batch + "\n")
     val lines = spark.read.text(dir.toString)
     Seq("metrics" -> Wire.metrics(lines), "logs" -> Wire.logs(lines),
         "events" -> Wire.events(lines)).foreach { case (name, df) =>
       val plan = df.queryExecution.executedPlan
-      val parses = plan.flatMap(_.expressions)
-        .flatMap(_.collect { case j: JsonToStructs => j })
+      val exprs = plan.flatMap(_.expressions)
+      val decodes = exprs.flatMap(_.collect { case d: WireDecode => d })
+      val parses = exprs.flatMap(_.collect { case j: JsonToStructs => j })
       assert(plan.collectLeaves().size == 1, s"$name scans:\n$plan")
-      assert(parses.size == 1, s"$name from_json evaluations:\n$plan")
+      // the one decode holds its from_json fallback inside; none in the plan
+      assert(decodes.size == 1, s"$name decode generators:\n$plan")
+      assert(parses.isEmpty, s"$name from_json evaluations:\n$plan")
       assert(df.count() == 1, name)
     }
   }
