@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, Expression,
   Generator, GenericInternalRow, JsonToStructs, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JSONOptions}
+import org.apache.spark.sql.catalyst.json.JSONOptions
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, MapData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -95,7 +95,8 @@ object WireLayout {
   * streaming parser from the factory `from_json` builds; any other
   * line goes whole to `from_json(line, Schemas.wireBatch)`, evaluated here,
   * so `from_json`'s PERMISSIVE and partial-result semantics stay the
-  * reference and the only reading of such a line. Canonical means: a root
+  * reference and the only reading of such a line. Canonical means: valid
+  * UTF-8 starting with neither a byte-order mark nor a NUL byte; a root
   * object holding only the six envelope keys, each at most once, each null
   * or an array of objects whose keys belong to that key's record struct,
   * each at most once; string fields strings or null, `v` a finite number
@@ -129,12 +130,6 @@ case class WireDecode(child: Expression, layout: WireLayout, sessionZone: String
     Cast(BoundReference(timeField, StringType, nullable = true),
       TimestampType, Some(sessionZone), EvalMode.TRY)
 
-  /** The last `t` cast and its value: an agent stamps a whole collection
-    * pass with one time, so consecutive records mostly share `t`.
-    */
-  @transient private var lastT: UTF8String = _
-  @transient private var lastTime: Any = _
-
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val line = child.eval(input).asInstanceOf[UTF8String]
     if (line == null) Nil
@@ -145,12 +140,7 @@ case class WireDecode(child: Expression, layout: WireLayout, sessionZone: String
   }
 
   private def emit(rec: InternalRow, into: ArrayBuffer[InternalRow]): Unit = {
-    val t = rec.getUTF8String(timeField)
-    if (t == null || !t.equals(lastT)) {
-      lastT = t
-      lastTime = time.eval(rec)
-    }
-    val row = layout.emit(rec, lastTime)
+    val row = layout.emit(rec, time.eval(rec))
     if (row != null) into += row
   }
 
@@ -159,6 +149,7 @@ case class WireDecode(child: Expression, layout: WireLayout, sessionZone: String
     */
   private[graft] def canonical(line: UTF8String): ArrayBuffer[InternalRow] = {
     val p = parser(line)
+    if (p == null) return null
     try {
       if (p.nextToken() != START_OBJECT) return null
       val short, long = new ArrayBuffer[InternalRow]
@@ -182,13 +173,13 @@ case class WireDecode(child: Expression, layout: WireLayout, sessionZone: String
     } finally p.close()
   }
 
-  /** `from_json` reads the line through a UTF-8 `Reader`
-    * ([[CreateJacksonParser.utf8String]]). A line of valid UTF-8 that starts
-    * with neither a byte-order mark nor a NUL byte (either would steer
-    * Jackson's byte-source encoding detection) reads as the same characters
-    * through the same factory's byte-source parser, which skips the
-    * char decoding; any other line takes `from_json`'s construction. An
-    * all-ASCII line is valid UTF-8 without the full check.
+  /** `from_json` reads the line through a UTF-8 `Reader`. A line of valid
+    * UTF-8 that starts with neither a byte-order mark nor a NUL byte (either
+    * would steer Jackson's byte-source encoding detection) reads as the same
+    * characters through the same factory's byte-source parser, which skips
+    * the char decoding; any other line gets no parser (null) and so goes to
+    * [[viaReference]]. An all-ASCII line is valid UTF-8 without the full
+    * check.
     */
   private def parser(line: UTF8String): JsonParser = {
     val bb = line.getByteBuffer
@@ -199,8 +190,7 @@ case class WireDecode(child: Expression, layout: WireLayout, sessionZone: String
     var plain = (ascii || line.isValid) && (len == 0 || bytes(off) != 0xEF.toByte)
     i = 0
     while (plain && i < math.min(len, 4)) { plain = bytes(off + i) != 0; i += 1 }
-    if (plain) factory.createParser(bytes, off, len)
-    else CreateJacksonParser.utf8String(factory, line)
+    if (plain) factory.createParser(bytes, off, len) else null
   }
 
   /** Reads an array of records up to its end; false if one is not canonical.
@@ -250,7 +240,7 @@ case class WireDecode(child: Expression, layout: WireLayout, sessionZone: String
       if (p.nextToken() != VALUE_STRING) return null
       values += UTF8String.fromString(p.getText)
     }
-    if (!distinct(keys)) return null
+    if (keys.distinct.length != keys.length) return null
     ArrayBasedMapData(keys.toArray[Any], values.toArray[Any])
   }
 
@@ -290,17 +280,4 @@ object WireDecode {
     while (i < names.length && names(i) != name) i += 1
     if (i < names.length) i else -1
   }
-
-  /** Small key sets by pairwise compare, large ones by hashing. */
-  private def distinct(keys: ArrayBuffer[UTF8String]): Boolean =
-    if (keys.length > 8) keys.distinct.length == keys.length
-    else {
-      var i = 1
-      while (i < keys.length) {
-        var j = 0
-        while (j < i) { if (keys(i) == keys(j)) return false; j += 1 }
-        i += 1
-      }
-      true
-    }
 }

@@ -202,33 +202,32 @@ class WireDecodeSpec extends AnyFunSuite {
         (_: String) => """{"logs":5}"""))
       yield root(jsArray(ms)))
 
-  /** Byte-level lines: invalid UTF-8 inside a string decodes to U+FFFD on
-    * both paths (still canonical); a byte-order mark or a leading NUL
-    * (path left to the parser, `None`); a raw control char (a Jackson error).
+  /** Byte-level lines, each left to the fallback: invalid UTF-8 inside a
+    * string, a byte-order mark or a leading NUL, a raw control char (a
+    * Jackson error).
     */
-  private val rawLines: Seq[(Array[Byte], Option[Boolean])] = {
+  private val rawLines: Seq[Array[Byte]] = {
     def line(host: Array[Byte]) =
       """{"m":[{"t":"2024-01-01T00:00:01Z","m":"gauge","h":"""".getBytes("UTF-8") ++ host ++
         """","n":"raw","v":1}],"l":[{"t":"2024-01-01T00:00:02Z","s":"s","h":"""".getBytes("UTF-8") ++
         host ++ """"}]}""".getBytes("UTF-8")
     def bytes(xs: Int*) = xs.map(_.toByte).toArray
     Seq(bytes(0x80), bytes(0xC0, 0x80), bytes(0xED, 0xA0, 0x80), bytes(0xF4, 0x90, 0x80, 0x80),
-      bytes(0xE6, 0x97), bytes(0x61, 0xFF, 0x62)).map(b => line(b) -> Some(true)) ++
-      Seq(bytes(0x01), bytes(0x1F)).map(b => line(b) -> Some(false)) ++
+      bytes(0xE6, 0x97), bytes(0x61, 0xFF, 0x62), bytes(0x01), bytes(0x1F)).map(line) ++
       Seq(bytes(0xEF, 0xBB, 0xBF) ++ line(bytes(0x61)), bytes(0x00) ++ line(bytes(0x61)),
-        bytes(0x20, 0x00) ++ line(bytes(0x61))).map(_ -> None)
+        bytes(0x20, 0x00) ++ line(bytes(0x61)))
   }
 
   /** (line bytes, expected fast path): canonical lines, some padded with
     * whitespace, non-canonical ones, and the byte-level lines.
     */
-  private val corpus: Seq[(Array[Byte], Option[Boolean])] = {
+  private val corpus: Seq[(Array[Byte], Boolean)] = {
     val line = Gen.frequency(
       3 -> canonical.flatMap(l => Gen.oneOf(l, s"  $l ", s"\t$l")).map(_ -> true),
       1 -> nonCanonical.map(_ -> false))
     val lines = for (ls <- Gen.listOfN(400, line); ds <- defectLines) yield ls ++ ds.map(_ -> false)
     lines.pureApply(Gen.Parameters.default, Seed(20241019L))
-      .map { case (l, fast) => l.getBytes("UTF-8") -> Some(fast) } ++ rawLines
+      .map { case (l, fast) => l.getBytes("UTF-8") -> fast } ++ rawLines.map(_ -> false)
   }
 
   private def show(line: Array[Byte]) = new String(line, "UTF-8")
@@ -237,7 +236,7 @@ class WireDecodeSpec extends AnyFunSuite {
     val probe = WireDecode(Literal(null, StringType), WireLayout.Metrics, "UTC")
     val taken = corpus.map { case (l, _) => probe.canonical(UTF8String.fromBytes(l)) != null }
     corpus.zip(taken).foreach { case ((l, expected), fast) =>
-      expected.foreach(e => assert(fast == e, s"fast path $fast for: ${show(l)}"))
+      assert(fast == expected, s"fast path $fast for: ${show(l)}")
     }
     assert(taken.count(identity) >= 100 && taken.count(!_) >= 100, taken.count(identity))
   }
