@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Enrich
 import graft.sources.{Collectors, Journald, Procfs, Prometheus, Wire}
-import graft.streaming.{Ingest, IngestMetrics, Retention}
+import graft.streaming.{Ingest, Retention}
 
 /** End-to-end ingest pipeline demo (the yamon agent→server→storage flow,
   * SURVEY.md §3): wire batches + journald + prometheus in, enriched,

@@ -193,29 +193,6 @@ private[graft] object Artifacts {
       maxSegments: Int): Array[File] =
     overweightDirs(parent, prefix, maxSegments, foldableFile(parent))
 
-  /** [[swapStagedDirs]] driven from the STAGED side, for rewrites whose
-    * staged tree may hold partition dirs with NO live counterpart yet
-    * (a keyed upsert's first rows for a fresh date): existing dirs swap
-    * through the aside-rename chain, new dirs install by direct rename
-    * — every crash point leaves either the old dir, the new dir, or a
-    * recoverable aside, never a deleted-but-unreplaced partition (the
-    * dynamic-partition-overwrite commit's torn window — r14 review).
-    */
-  private[graft] def installStagedDirs(
-      spark: org.apache.spark.sql.SparkSession,
-      stage: String, liveRoot: String, prefix: String): Unit = {
-    for {
-      d <- Option(new File(stage).listFiles()).getOrElse(Array.empty[File])
-      if d.isDirectory && d.getName.startsWith(prefix)
-    } {
-      val live = new File(liveRoot, d.getName)
-      if (live.isDirectory) publishByRename(live.getPath, d.getPath)
-      else require(d.renameTo(live), s"install rename to $live failed")
-      spark.catalog.refreshByPath(live.getPath)
-    }
-    rmTree(new File(stage))
-  }
-
   /** Sweep crashed staged-write trees (`.tmp-stage-*` under `root` —
     * dot-prefixed, so no live reader ever saw them) — the maintenance-
     * entry half of the staged-swap protocol.
@@ -338,7 +315,7 @@ private[graft] object Artifacts {
     * lease). On a network fs without reliable file locking the lease
     * degrades to advisory; a deployment there fronts maintenance with
     * a real lock service (or a transactional table format), as the
-    * upsertByKey local-path guard already demands for the data itself.
+    * `Ingest.requireLocal` guard already demands for the data itself.
     */
   private[graft] def defaultLeasePatienceMs: Long =
     sys.props.get("graft.lease.patience.ms").map { v =>

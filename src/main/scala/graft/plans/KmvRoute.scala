@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.types.{BinaryType, DateType, IntegerType, LongType, StringType, TimestampType}
+import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType}
 import graft.functions.{KmvAgg, KmvMergeAgg}
 
 /** SKETCH-PARTIAL materialized-view routing (r13) — [[CorpusRoute]]'s

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.types.{DecimalType, LongType, StringType}
+import org.apache.spark.sql.types.{DecimalType, StringType}
 
 /** LTS query routing (SURVEY.md §4; ref: res/schema.sql:22-37,54-69): the
   * reference keeps 1-minute materialized rollups (`metrics_*_lts`) beside
@@ -40,7 +40,9 @@ object LtsRoute extends Rule[LogicalPlan] {
   private val routes = TrieMap[String, String]()
 
   /** Register a raw→LTS route; the LTS table must be the minute rollup of
-    * the raw table with schema (bucket, <dims...>, sum_value, n).
+    * the raw table ([[graft.streaming.Ingest.ltsRollup]]): (bucket,
+    * <dims...>, sum_value, n, ...). The rewrite reads only `sum_value`
+    * and `n`.
     */
   def register(spark: SparkSession, rawPath: String, ltsPath: String): Unit =
     routes.put(RouteSupport.canon(spark, rawPath), ltsPath): Unit
@@ -156,14 +158,16 @@ object LtsRoute extends Rule[LogicalPlan] {
   }
 
   /** Fold rollup segments to one row per key — every column but the
-    * two measures is key. The sum is cast back to the stored decimal
-    * type, the one the rewrite's sum-type check matches.
+    * [[graft.streaming.Ingest.ltsMeasures]] is key. Each measure's sum is
+    * cast back to its stored type: the decimal one is what the rewrite's
+    * sum-type check matches.
     */
   private def remerge(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, sum}
-    df.groupBy(df.columns.filterNot(Set("sum_value", "n")).map(col): _*)
-      .agg(sum(col("sum_value")).cast(df.schema("sum_value").dataType)
-        .as("sum_value"), sum(col("n")).as("n"))
+    val measures = graft.streaming.Ingest.ltsMeasures
+    val folded = measures.map(m => sum(col(m)).cast(df.schema(m).dataType).as(m))
+    df.groupBy(df.columns.filterNot(measures.contains).map(col): _*)
+      .agg(folded.head, folded.tail: _*)
   }
 
   /** Match Aggregate over the registered relation, after the shared

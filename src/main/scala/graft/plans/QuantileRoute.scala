@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.types.{DateType, IntegerType, LongType, TimestampType}
 import graft.functions.{QHistMergeStateAgg, QHistStateAgg}
 
 /** QUANTILE-PARTIAL materialized-view routing (r14) — [[KmvRoute]]'s

@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.operators.Enrich
 
 /** Prometheus exposition-format parser (S18/T4; ref: prom/scrape.go:52-101,
   * FIXTURES.md §B4): text lines → metric stream.

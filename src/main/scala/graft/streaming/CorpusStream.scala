@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import graft.operators.TextOps
 
 /** Streaming corpus construction — the ingest-time half of the batch

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.Enrich
 
 /** Storage layer of the engine — the Spark re-expression of the reference's
@@ -21,10 +21,10 @@ import graft.operators.Enrich
   *  - TTL partition drops → [[Retention.dropExpired]] (D7)
   *
   * Invariant: a `foreachBatch` body here executes its micro-batch's plan
-  * once — a second action on the batch would re-run the source scan and
-  * any stateful aggregation above it (pinned in LtsRouteSpec through
-  * `numInputRows`). The LTS rollup stream holds no state at all: each
-  * batch appends its own minute partials ([[streamLtsRollupTo]]).
+  * once — a second action on the batch would re-run the source scan
+  * (pinned in LtsRouteSpec through `numInputRows`). No stream here holds
+  * aggregation state: each LTS batch appends its own minute partials
+  * ([[streamLtsRollupTo]]), D1/D2 included ([[streamDownsampleTo]]).
   */
 object Ingest {
 
@@ -105,27 +105,41 @@ object Ingest {
       .saveAsTable(name)
 
   /** The [[graft.plans.LtsRoute]]-compatible minute rollup of a raw table:
-    * (bucket, dims..., sum_value decimal, n). Decimal sums make routed
-    * re-aggregation bit-identical to scanning raw (ref: the sumState/
-    * avgState MV columns, res/schema.sql:39-50,71-82).
+    * (bucket, dims..., [[ltsMeasures]]), every measure a mergeable partial
+    * (ref: the sumState/avgState MV columns, res/schema.sql:39-50,71-82).
+    * `sum_value` (decimal) and `n` (rows) serve the route: decimal sums
+    * make routed re-aggregation bit-identical to scanning raw.
+    * `sum_double` and `n_value` (non-null values) serve the D1/D2 view
+    * [[downsampled]]: `decimal(18,2)` would round gauges to cents, and a
+    * gauge average skips null values where `n` counts them.
     */
   def ltsRollup(raw: DataFrame, dims: Seq[String]): DataFrame =
     raw.groupBy(date_trunc("minute", col("time")).as("bucket") +: dims.map(col): _*)
       .agg(
         sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
           .as("sum_value"),
-        count(lit(1)).as("n"))
+        count(lit(1)).as("n"),
+        sum(col("value").cast("double")).as("sum_double"),
+        count(col("value")).as("n_value"))
+
+  /** The measure columns of [[ltsRollup]]; every other column is a key. */
+  val ltsMeasures: Seq[String] = Seq("sum_value", "n", "sum_double", "n_value")
+
+  /** The D1/D2 series key under the minute bucket: (type, host, name) and
+    * the map-typed tags canonicalized for grouping (D3, SURVEY.md §7.4).
+    */
+  private val downsampleDims = Seq("type", "host", "name", "tags_key")
 
   /** D1/D2 batch recompute — the exact ClickHouse-MV-equivalent answer
     * (ref: res/schema.sql:39-50,71-82): 1-minute buckets per
-    * (host, name, tags) series; gauges average, counters sum. The map-typed
-    * tag key is canonicalized for grouping (D3, SURVEY.md §7.4).
+    * (host, name, tags) series; gauges average, counters sum.
+    * [[downsampled]] is tested against it.
     */
   def downsample(metrics: DataFrame): DataFrame =
     metrics
       .withColumn("bucket", date_trunc("minute", col("time")))
       .withColumn("tags_key", Enrich.tagsKey(col("tags")))
-      .groupBy("bucket", "type", "host", "name", "tags_key")
+      .groupBy("bucket", downsampleDims: _*)
       .agg(
         avg(when(col("type") === "gauge", col("value"))).as("avg_value"),
         sum(when(col("type") === "counter", col("value"))).as("sum_value"),
@@ -134,28 +148,20 @@ object Ingest {
         when(col("type") === "gauge", col("avg_value")).otherwise(col("sum_value")))
       .select("bucket", "type", "host", "name", "tags_key", "value", "n")
 
-  /** D1/D2 as a continuous streaming aggregation: same grouping with a
-    * watermark bounding state (a deliberate improvement over the
-    * reference's unbounded insert-time aggregation, SURVEY.md §2.5).
-    * Update mode matches ClickHouse MV re-aggregation semantics.
+  /** D1/D2 read from the rollup [[streamDownsampleTo]] maintains:
+    * [[downsample]]'s columns, folded over the rollup's partial rows per
+    * (bucket, type, host, name, tags_key). A gauge averages its non-null
+    * values (`sum(sum_double) / sum(n_value)`, yamon's finalized
+    * `avgState`), a counter sums them, and `n` counts every row.
     */
-  def downsampleStream(metrics: DataFrame, watermark: String = "10 minutes"): DataFrame =
-    metrics
-      .withWatermark("time", watermark)
-      .withColumn("tags_key", Enrich.tagsKey(col("tags")))
-      .groupBy(
-        window(col("time"), "1 minute").as("w"),
-        col("type"), col("host"), col("name"), col("tags_key"))
-      .agg(
-        avg(when(col("type") === "gauge", col("value"))).as("avg_value"),
-        sum(when(col("type") === "counter", col("value"))).as("sum_value"),
-        count(lit(1)).as("n"))
-      .select(
-        col("w.start").as("bucket"), col("type"), col("host"), col("name"),
-        col("tags_key"),
-        when(col("type") === "gauge", col("avg_value"))
-          .otherwise(col("sum_value")).as("value"),
-        col("n"))
+  def downsampled(rollup: DataFrame): DataFrame =
+    rollup.groupBy("bucket", downsampleDims: _*)
+      .agg(sum(col("sum_double")).as("sum_double"),
+        sum(col("n_value")).as("n_value"), sum(col("n")).as("n"))
+      .withColumn("value",
+        when(col("type") === "gauge", col("sum_double") / col("n_value"))
+          .when(col("type") === "counter", col("sum_double")))
+      .select("bucket", "type", "host", "name", "tags_key", "value", "n")
 
   /** Streaming exact dedup: the first occurrence of each key survives,
     * duplicates arriving within the event-time watermark are dropped, and
@@ -211,6 +217,17 @@ object Ingest {
       .start()
   }
 
+  /** D1/D2 maintenance: the [[streamLtsRollupTo]] stream over the dims
+    * (type, host, name, tags_key), read through [[downsampled]]. No
+    * state store and no rewrite of stored rows: a minute whose rows span
+    * several micro-batches keeps one partial per segment until a
+    * compaction folds them, and the view re-aggregates them either way.
+    */
+  def streamDownsampleTo(metrics: DataFrame, path: String,
+      checkpoint: String): StreamingQuery =
+    streamLtsRollupTo(metrics.withColumn("tags_key", Enrich.tagsKey(col("tags"))),
+      path, checkpoint, downsampleDims)
+
   /** The maintained tables commit by `java.io.File` renames: a remote
     * path would stage remotely but install against the LOCAL view,
     * silently writing nothing (review-found, r14), so refuse loudly. A
@@ -224,153 +241,10 @@ object Ingest {
         s"(scheme '$scheme') — use a local path or a transactional table format")
   }
 
-  /** Parquet-level MERGE for a date-partitioned table, the commit of
-    * [[streamDownsampleTo]] (its averaged values do not add, so a revised
-    * minute must replace its row): rows whose key appears in `batch`
-    * are replaced, the rest kept, and only the date partitions the batch
-    * lands in are touched. The batch is `localCheckpoint`ed once, so its
-    * plan and state-store update run once; a live table's merged frame is
-    * snapshotted too, because the write replaces the files it reads.
-    *
-    * The merged dates stage as a dot-prefixed tree and each date dir
-    * swaps in by aside-rename (or installs by rename when new), so every
-    * crash point leaves old files, new files or a recoverable aside,
-    * healed at the next entry; the keyed merge itself is
-    * replay-idempotent. The routing `date` is the bucket instant's UTC
-    * epoch-day, pinned by `datekey=utc-epoch-day` in the root's `_meta`:
-    * a table without it may hold keys under session-zone dates, where
-    * the merge would miss the stored row and keep a second one, so it
-    * refuses until [[certifyUtcDateLayout]] has verified and stamped it.
-    */
-  private[graft] def upsertByKey(batch: DataFrame, path: String,
-      keys: Seq[String]): Unit = {
-    import graft.operators.Artifacts
-    val spark = batch.sparkSession
-    requireLocal(path, "upsertByKey")
-    // the date list, the anti-join and the write all read this snapshot
-    val dated = batch.withColumn("date", utcEpochDay).localCheckpoint(true)
-    val dates = dated.select("date").distinct()
-      .collect().map(_.getDate(0): Any)
-    if (dates.isEmpty) return
-    new java.io.File(path).mkdirs()
-    Artifacts.recoverDirSwaps(path, "date=")
-    Artifacts.sweepStageTrees(path)
-    val hasLive = Option(new java.io.File(path).listFiles())
-      .exists(_.exists(_.getName.startsWith("date=")))
-    if (hasLive) requireUtcDateMarker(path)
-    else writeDateMarker(path)
-    // null-safe: `isin(null)` matches nothing, and the install replaces
-    // the whole default-partition dir that null dates land in
-    val nonNullDates = dates.filter(_ != null)
-    val dateMatch = {
-      val base =
-        if (nonNullDates.nonEmpty) col("date").isin(nonNullDates: _*)
-        else lit(false)
-      if (dates.exists(_ == null)) base || col("date").isNull else base
-    }
-    // a fresh table writes the batch snapshot as is; a live table's merge
-    // reads files the swap replaces, so it is snapshotted first
-    val snapshot =
-      if (!hasLive) dated
-      else {
-        val existing = spark.read.parquet(path).filter(dateMatch)
-        val revised = dated.select(keys.map(col): _*)
-        // null-safe too, or a stored null-keyed row is kept twice
-        val sameKey = keys.map(k => existing(k) <=> revised(k))
-          .reduce(_ && _)
-        existing.join(revised, sameKey, "left_anti")
-          .unionByName(dated).localCheckpoint(true)
-      }
-    val stage = s"$path/.tmp-stage-${java.util.UUID.randomUUID()}"
-    snapshot.write
-      .option("compression", "zstd")
-      .partitionBy("date")
-      .parquet(stage)
-    snapshot.unpersist()
-    Artifacts.installStagedDirs(spark, stage, path, "date=")
-    graft.plans.LtsRoute.invalidate(path)
-  }
-
   /** The routing date of a `bucket` instant: its UTC epoch-day. */
   private[graft] def utcEpochDay: Column = expr(
     "date_add(DATE'1970-01-01', " +
       "CAST(FLOOR(unix_timestamp(bucket) / 86400) AS INT))")
-
-  /** The date-derivation pin [[upsertByKey]] writes and checks: ONE
-    * `datekey=` line in the table root's `_meta`.
-    */
-  private val DateKey = "utc-epoch-day"
-
-  private def writeDateMarker(path: String): Unit = {
-    // temp + atomic move like every other _meta writer (ADVICE r15): a
-    // crash mid-write must not leave a torn _meta whose missing datekey
-    // wedges every subsequent upsert behind a manual re-certify. Other
-    // keys a future writer may have stored there are merged, not
-    // dropped.
-    val meta = new java.io.File(path, "_meta")
-    val kept = graft.operators.Artifacts.parseKvFile(meta)
-      .getOrElse(Map.empty[String, String]) - "datekey"
-    val lines = (kept.toSeq.sortBy(_._1) :+ ("datekey" -> DateKey))
-      .map { case (k, v) => s"$k=$v" }.mkString("", "\n", "\n")
-    // sweep temps orphaned by a crash between write and move; unlike
-    // writeLeaseClaim's `.lease-w-*` sweep this runs with NO lock, hence
-    // the age-gated sweep
-    graft.operators.Artifacts.sweepOrphanTemps(new java.io.File(path),
-      _.startsWith(".meta-w-"))
-    val tmp = new java.io.File(path, s".meta-w-${java.util.UUID.randomUUID()}")
-    java.nio.file.Files.write(tmp.toPath,
-      lines.getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
-    java.nio.file.Files.move(tmp.toPath, meta.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
-  }
-
-  private def requireUtcDateMarker(path: String): Unit = {
-    val marked = graft.operators.Artifacts
-      .parseKvFile(new java.io.File(path, "_meta")).flatMap(_.get("datekey"))
-    require(marked.contains(DateKey),
-      s"upsertByKey on $path: existing date partitions carry no " +
-        s"'datekey=$DateKey' marker (found ${marked.getOrElse("none")}) — " +
-        "merging against dirs derived under another date rule would " +
-        "silently double-count the keys stored there; rebuild the table " +
-        "(it is derived state), or run Ingest.certifyUtcDateLayout once " +
-        "if it was written by the UTC derivation before markers existed")
-  }
-
-  /** Verify an EXISTING unmarked table's date layout against the UTC
-    * epoch-day derivation row by row and stamp the marker — the
-    * mechanical upgrade for tables the r14 code wrote before the pin
-    * existed. Refuses (without stamping) on the first dir holding a row
-    * whose bucket derives a different date: such a table must rebuild.
-    */
-  def certifyUtcDateLayout(spark: SparkSession, path: String): Unit = {
-    val bad = spark.read.parquet(path)
-      .filter(!(col("date") <=> utcEpochDay))
-      .limit(1).collect()
-    require(bad.isEmpty,
-      s"certifyUtcDateLayout on $path: found a row stored under " +
-        s"date=${bad.head.getAs[Any]("date")} whose bucket derives a " +
-        "different UTC epoch-day — the table was written under another " +
-        "date rule; rebuild it instead of marking")
-    writeDateMarker(path)
-  }
-
-  /** Start the LTS maintenance stream: 1-minute downsample in update mode
-    * every 5 s, upserted into the long-term parquet table per micro-batch
-    * by (bucket, type, host, name, tags_key) through [[upsertByKey]] — a
-    * minute whose rows span several micro-batches keeps one row, revised
-    * by each re-emission, never a partial row beside the revised one.
-    */
-  def streamDownsampleTo(metrics: DataFrame, path: String, checkpoint: String,
-      watermark: String = "10 minutes"): StreamingQuery =
-    downsampleStream(metrics, watermark).writeStream
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.ProcessingTime("5 seconds"))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertByKey(batch, path, Seq("bucket", "type", "host", "name", "tags_key"))
-      }
-      .start()
 }
 
 /** D7 — TTL retention: raw tables keep 30 days, LTS tables 1 year, enforced

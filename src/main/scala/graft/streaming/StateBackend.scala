@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
   * buffers).
   *
   * Spark's default provider (HDFSBackedStateStoreProvider) keeps every
-  * state key in executor HEAP: fine for LTS downsample state (bounded by
-  * watermark window × series cardinality), fatal for dedup state at
+  * state key in executor HEAP: fine for audit session buffers (bounded
+  * by concurrently open sessions), fatal for dedup state at
   * corpus scale — a continuously ingested 100 TB corpus' seen-key space
   * outgrows any JVM heap long before it outgrows a disk. The built-in
   * RocksDB provider keeps state in native memory + local SSD with
@@ -17,8 +17,8 @@ import org.apache.spark.sql.SparkSession
   * large-keyspace streaming dedup; since r8 the UNBOUNDED-keyspace
   * builders therefore default the session onto RocksDB
   * ([[defaultToRocksDB]], opt-out via `graft.streaming.state.heapDefault`),
-  * while the bounded-state families (LTS downsample, audit
-  * sessionization) leave the conf alone.
+  * while the bounded-state family (audit sessionization) leaves the
+  * conf alone. The LTS rollup stream keeps no state at all.
   *
   * The provider class is a SESSION conf that each streaming query
   * captures at start and PINS into its checkpoint's offset-log metadata

@@ -13,7 +13,6 @@ import graft.TestSpark
   */
 class AnnServingSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
-  import spark.implicits._
   graft.functions.VectorFunctions.ensureRegistered(spark)
 
   /** Private dataset copy: same bytes, different fingerprint root, so

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.{Tables, TestSpark}
 
 /** Corpus-construction operators (repetition signals, chunk dedup,

@@ -564,7 +564,6 @@ class CorpusPropertySpec extends AnyFunSuite {
   }
 
   test("mix gate semi-join fallback equals the literal path; the collect gate trips past budget") {
-    import org.apache.spark.sql.functions.col
     for (seed <- 50L to 52L) {
       val rnd = new scala.util.Random(seed)
       val vocab = Vector("aa", "bb", "cc", "dd", "ee", "ff", "gg")

@@ -113,7 +113,6 @@ class TextIndexSpec extends AnyFunSuite {
   test("shard-local postings compaction: only overweight dirs rewrite, the " +
       "posting set is untouched, and a crashed shard swap refuses pruned " +
       "serving then heals") {
-    import org.apache.spark.sql.functions.col
     import spark.implicits._
     val docs = graft.Tables.documents(spark, dir)
     val base = java.nio.file.Files.createTempDirectory("graft-tidxsl").toString

@@ -164,7 +164,6 @@ class CorpusRouteSpec extends AnyFunSuite {
   test("a crashed swap of a DOTTED lang partition heals at the next " +
       "upsert entry — mid-swap aside + orphan stage tree, no group's " +
       "partials lost or double-kept") {
-    import org.apache.spark.sql.SparkSession
     val b = Files.createTempDirectory("graft_route_dotheal").toString
     import spark.implicits._
     // pt.BR: the partition VALUE contains a dot — the r14-ADVICE case

@@ -131,7 +131,6 @@ class KmvRouteSpec extends AnyFunSuite {
   test("a SEGMENTED rollup (blind streaming appends, pre-compaction) " +
       "routes and answers bit-identically — the KmvMergeAgg re-merge " +
       "folds extra state rows per day by merge-closure") {
-    import spark.implicits._
     val k = 64
     val d = java.nio.file.Files.createTempDirectory("graft-kmvseg-ds").toString
     java.nio.file.Files.copy(

@@ -119,109 +119,6 @@ class LtsRouteSpec extends AnyFunSuite {
     }
   }
 
-  test("upsertByKey heals crashed swap residue at entry and a " +
-      "residue-bearing rollup declines to route until healed") {
-    import spark.implicits._
-    val roll = java.nio.file.Files
-      .createTempDirectory("graft-lts-heal").toString + "/lts"
-    def batchOf(v: Double) = Seq(
-      ("2024-01-01 10:01:00", "cpu", v),
-      ("2024-01-02 10:01:00", "mem", v))
-      .toDF("b0", "name", "v")
-      .select(col("b0").cast("timestamp").as("bucket"), col("name"),
-        col("v").cast(org.apache.spark.sql.types.DecimalType(18, 2))
-          .as("sum_value"))
-      .withColumn("n", org.apache.spark.sql.functions.lit(1L))
-    graft.streaming.Ingest.upsertByKey(batchOf(1.0), roll,
-      Seq("bucket", "name"))
-    // fabricate a crashed swap: one date dir renamed aside mid-swap,
-    // plus an orphaned stage tree
-    val root = new java.io.File(roll)
-    val dateDir = root.listFiles().filter(_.getName.startsWith("date=")).head
-    val aside = new java.io.File(root, s"${dateDir.getName}.old-deadbeef")
-    assert(dateDir.renameTo(aside))
-    assert(new java.io.File(root, ".tmp-stage-deadbeef").mkdirs())
-    // (the cache-miss DECLINE while an aside exists is pinned at the
-    // shared RelationCache in QuantileRouteSpec; the heal below is this
-    // entry's contract)
-    graft.streaming.Ingest.upsertByKey(batchOf(2.0), roll,
-      Seq("bucket", "name"))
-    assert(!new java.io.File(root, ".tmp-stage-deadbeef").exists(),
-      "orphan stage tree not swept")
-    assert(!aside.exists(), "crashed aside not healed")
-    spark.catalog.refreshByPath(roll)
-    // a SET compare over ALL rows: toMap would collapse a double-kept
-    // key to one arbitrary entry and mask exactly the regression this
-    // pin exists for (review-found, r14)
-    val got = spark.read.parquet(roll)
-      .select(col("name"), col("sum_value").cast("double"))
-      .as[(String, Double)].collect().toSeq
-    // the upsert replaced both keys' rows with the revised values — no
-    // row lost to the crashed swap, none double-kept
-    assert(got.size == 2 && got.toSet === Set("cpu" -> 2.0, "mem" -> 2.0))
-  }
-
-  test("upsertByKey pins its date derivation: an existing table without " +
-      "the datekey marker refuses; certifyUtcDateLayout verifies and " +
-      "stamps a genuinely-UTC legacy table; null buckets merge " +
-      "null-safely") {
-    import spark.implicits._
-    val roll = java.nio.file.Files
-      .createTempDirectory("graft-lts-marker").toString + "/lts"
-    def batchOf(b0: Option[String], v: Double) = Seq((b0, "cpu", v))
-      .toDF("b0", "name", "v")
-      .select(col("b0").cast("timestamp").as("bucket"), col("name"),
-        col("v").cast(org.apache.spark.sql.types.DecimalType(18, 2))
-          .as("sum_value"))
-      .withColumn("n", org.apache.spark.sql.functions.lit(1L))
-    // a fresh table self-marks
-    graft.streaming.Ingest.upsertByKey(
-      batchOf(Some("2024-01-01 10:01:00"), 1.0), roll, Seq("bucket", "name"))
-    val meta = new java.io.File(roll, "_meta")
-    assert(meta.exists(), "fresh upsert table must stamp its datekey")
-    // a pre-marker (r14-written) table: live date dirs, no _meta —
-    // upsert must refuse rather than risk merging across derivations
-    assert(meta.delete())
-    val refusal = intercept[IllegalArgumentException] {
-      graft.streaming.Ingest.upsertByKey(
-        batchOf(Some("2024-01-01 10:02:00"), 2.0), roll,
-        Seq("bucket", "name"))
-    }
-    assert(refusal.getMessage.contains("datekey"))
-    // the mechanical upgrade: this table IS UTC-derived, so certify
-    // verifies row by row and stamps; upserts then proceed
-    graft.streaming.Ingest.certifyUtcDateLayout(spark, roll)
-    assert(meta.exists())
-    graft.streaming.Ingest.upsertByKey(
-      batchOf(None, 5.0) // a NULL bucket lands in the default partition
-        .unionByName(batchOf(Some("2024-01-01 10:01:00"), 3.0)),
-      roll, Seq("bucket", "name"))
-    // and a second null-bucket upsert must MERGE against the stored
-    // null-date row (isin(null) matches nothing — the r14-ADVICE gap),
-    // replacing it rather than double-keeping
-    graft.streaming.Ingest.upsertByKey(batchOf(None, 7.0), roll,
-      Seq("bucket", "name"))
-    spark.catalog.refreshByPath(roll)
-    val got = spark.read.parquet(roll)
-      .select(col("bucket").cast("string"), col("sum_value").cast("double"))
-      .as[(Option[String], Double)].collect().toSeq
-    assert(got.size == 2, s"expected 2 rows (one per bucket key), got $got")
-    assert(got.collect { case (None, v) => v } === Seq(7.0),
-      "null-bucket row must be replaced, not dropped or double-kept")
-    assert(got.collect { case (Some(_), v) => v } === Seq(3.0))
-    // a table whose layout genuinely mismatches refuses to certify
-    val legacy = java.nio.file.Files
-      .createTempDirectory("graft-lts-legacy").toString + "/lts"
-    batchOf(Some("2024-01-01 10:01:00"), 1.0)
-      .withColumn("date", org.apache.spark.sql.functions
-        .to_date(org.apache.spark.sql.functions.lit("2024-06-30")))
-      .write.partitionBy("date").parquet(legacy)
-    val bad = intercept[IllegalArgumentException] {
-      graft.streaming.Ingest.certifyUtcDateLayout(spark, legacy)
-    }
-    assert(bad.getMessage.contains("rebuild"))
-  }
-
   test("a retention drop on a routed rollup invalidates its cached " +
       "relation: the routed answer equals the raw recompute over the " +
       "dates that remain") {
@@ -429,9 +326,56 @@ class LtsRouteSpec extends AnyFunSuite {
     assert(segs.size <= 9, segs.map(_.getName))
     assert(segs.exists(!_.getName.startsWith("seg-")), "no compacted file")
     assert(f.rollupN == 24)
-    assert(spark.read.parquet(f.ltsP).schema("sum_value").dataType ==
+    val schema = spark.read.parquet(f.ltsP).schema
+    assert(schema("sum_value").dataType ==
       org.apache.spark.sql.types.DecimalType(28, 2))
+    assert(schema("sum_double").dataType == org.apache.spark.sql.types.DoubleType)
+    assert(schema("n_value").dataType == org.apache.spark.sql.types.LongType)
+    // the fold keeps one row per key and sums every measure: with no
+    // null values and quarter fractions, the double measures agree with
+    // the decimal ones exactly
+    val folded = spark.read.option("basePath", f.ltsP)
+      .parquet(segs.filterNot(_.getName.startsWith("seg-")).map(_.getPath): _*)
+    assert(folded.groupBy("bucket", "host", "name", "date").count()
+      .filter(col("count") > 1).isEmpty, folded.collect().mkString("\n"))
+    assert(folded.filter(col("n") > 1).count() > 0)
+    assert(folded.filter(col("sum_double") =!= col("sum_value").cast("double") ||
+      col("n_value") =!= col("n")).isEmpty, folded.collect().mkString("\n"))
     f.assertRoutedEqualsRaw((1 to 11).map(batchOf): _*)
+  }
+
+  test("maintainRollup heals crashed swap residue at its next batch") {
+    val f = new StreamFixture
+    import spark.implicits._
+    def batchOf(v: Double) = Seq(
+      ("2024-01-01 10:01:00", "a", v), ("2024-01-02 10:01:00", "b", v))
+      .toDF("t", "host", "value")
+      .select(col("t").cast("timestamp").as("time"), col("host"),
+        lit("load.1").as("name"), col("value"))
+    LtsRoute.maintainRollup(f.ltsP, batchOf(1.0), f.dims, ("s", "0"))
+    // fabricate a crashed swap: one date dir renamed aside mid-swap,
+    // plus an orphaned stage tree
+    val root = new java.io.File(f.ltsP)
+    val dateDir = root.listFiles().filter(_.getName.startsWith("date=")).head
+    val aside = new java.io.File(root, s"${dateDir.getName}.old-deadbeef")
+    assert(dateDir.renameTo(aside))
+    val stage = new java.io.File(root, ".tmp-stage-deadbeef")
+    assert(stage.mkdirs())
+    // (the cache-miss DECLINE while an aside exists is pinned at the
+    // shared RelationCache in QuantileRouteSpec; the heal below is this
+    // entry's contract)
+    LtsRoute.maintainRollup(f.ltsP, batchOf(2.0), f.dims, ("s", "1"))
+    assert(!stage.exists(), "orphan stage tree not swept")
+    assert(!aside.exists() && dateDir.isDirectory, "crashed aside not healed")
+    spark.catalog.refreshByPath(f.ltsP)
+    // every stored partial, not a per-key map: a map would collapse a
+    // double-kept row and mask exactly what this pins. Each batch keeps
+    // its own partial per key, none lost to the crashed swap.
+    val got = spark.read.parquet(f.ltsP)
+      .select(col("host"), col("sum_double"), col("n"))
+      .as[(String, Double, Long)].collect().toSeq
+    assert(got.sorted == Seq(("a", 1.0, 1L), ("a", 2.0, 1L),
+      ("b", 1.0, 1L), ("b", 2.0, 1L)), got)
   }
 
   test("a stream under a fresh checkpoint refuses to feed another stream's " +

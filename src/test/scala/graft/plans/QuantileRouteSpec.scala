@@ -321,7 +321,6 @@ class QuantileRouteSpec extends AnyFunSuite {
   test("a SEGMENTED rollup (tagged streaming appends, pre-compaction) " +
       "routes and answers bit-identically to the raw recompute — the " +
       "re-merge aggregate restores one-state-per-group for any consumer") {
-    import spark.implicits._
     val d = java.nio.file.Files.createTempDirectory("graft-qseg-ds").toString
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
@@ -377,7 +376,6 @@ class QuantileRouteSpec extends AnyFunSuite {
   test("maintenance heals: a crashed staged-append tree is swept at " +
       "entry, and a rollup holding crashed-swap residue DECLINES to " +
       "route (the raw scan is the correct answer) until recovered") {
-    import spark.implicits._
     val d = java.nio.file.Files.createTempDirectory("graft-qres-ds").toString
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),

@@ -6,7 +6,6 @@ import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.TestSpark
 
 /** B2 transport: real HTTP round-trip into the spool, with the reference's

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 import java.time.LocalDate
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalacheck.Gen
 import graft.TestSpark
 import graft.model.Metric
+import graft.sources.Wire
 
 /** Storage layer: partitioned writes (D4/D5), downsampling (D1/D2/D3) in
   * batch and streaming, retention (D7). SURVEY.md §5.3-5.4.
@@ -72,20 +73,59 @@ class IngestSpec extends AnyFunSuite {
 
   test("downsample streaming == downsample batch (SURVEY §7.3 equivalence)") {
     implicit val sc = spark.sqlContext
+    val base = Files.createTempDirectory("graft_ds_stream").toString
     val mem = MemoryStream[Metric]
-    val q = Ingest.downsampleStream(
-        mem.toDF.withColumnRenamed("metricType", "type"), watermark = "0 seconds")
-      .writeStream.format("memory").queryName("lts_test")
-      .outputMode("update").start()
+    val q = Ingest.streamDownsampleTo(
+      mem.toDF.withColumnRenamed("metricType", "type"), s"$base/lts", s"$base/ckpt")
     try {
-      mem.addData(metrics: _*)
+      // both minute-0 series of h1 span the two micro-batches
+      mem.addData(metrics(0), metrics(2), metrics(3))
       q.processAllAvailable()
-      val streaming = spark.table("lts_test")
-        .select("bucket", "type", "host", "name", "tags_key", "value", "n")
-      val batch = Ingest.downsample(
-        metrics.toDF.withColumnRenamed("metricType", "type"))
-      assert(streaming.exceptAll(batch).isEmpty && batch.exceptAll(streaming).isEmpty)
+      mem.addData(metrics(1), metrics(4), metrics(5))
+      q.processAllAvailable()
+      assert(q.recentProgress.count(_.numInputRows > 0) == 2)
     } finally q.stop()
+    val view = Ingest.downsampled(spark.read.parquet(s"$base/lts"))
+    val batch = Ingest.downsample(
+      metrics.toDF.withColumnRenamed("metricType", "type"))
+    assert(view.exceptAll(batch).isEmpty && batch.exceptAll(view).isEmpty)
+  }
+
+  test("downsample view skips null values exactly like downsample") {
+    val base = Files.createTempDirectory("graft_ds_null").toString
+    val in = s"$base/in"
+    def line(sec: Int, typ: String, name: String, v: String) =
+      f"""{"m":[{"t":"2024-01-01T00:00:$sec%02dZ","m":"$typ","h":"a","n":"$name","v":$v}]}""" + "\n"
+    Files.createDirectory(Paths.get(in))
+    // two files, two micro-batches; a null sits among valid values in each
+    // series, and the `idle`/`drops` series hold nothing but nulls
+    Files.writeString(Paths.get(s"$in/a.json"),
+      line(1, "gauge", "load.1", "1.0") + line(2, "gauge", "load.1", "null") +
+        line(3, "counter", "rx", "10") + line(4, "gauge", "idle", "null"))
+    val q = Ingest.streamDownsampleTo(Wire.metrics(spark.readStream.text(in)),
+      s"$base/lts", s"$base/ckpt")
+    try {
+      q.processAllAvailable()
+      val staged = Files.writeString(Files.createTempFile("graft_ds_null", ".json"),
+        line(5, "gauge", "load.1", "4.0") + line(6, "counter", "rx", "null") +
+          line(7, "counter", "rx", "5") + line(8, "counter", "drops", "null"))
+      Files.move(staged, Paths.get(s"$in/b.json"),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      q.processAllAvailable()
+      assert(q.recentProgress.count(_.numInputRows > 0) == 2)
+    } finally q.stop()
+    val raw = Wire.metrics(spark.read.text(in))
+    assert(raw.filter(col("value").isNull).count() == 4)
+    val view = Ingest.downsampled(spark.read.parquet(s"$base/lts"))
+    val batch = Ingest.downsample(raw)
+    assert(view.exceptAll(batch).isEmpty && batch.exceptAll(view).isEmpty,
+      view.collect().mkString("\n"))
+    // the gauge averages its two values, not its three rows
+    val byName = view.collect().map(r => r.getAs[String]("name") ->
+      (Option(r.getAs[Any]("value")), r.getAs[Long]("n"))).toMap
+    assert(byName("load.1") == (Some(2.5), 3L))
+    assert(byName("rx") == (Some(15.0), 3L))
+    assert(byName("idle") == (None, 1L) && byName("drops") == (None, 1L))
   }
 
   test("downsample property: per-series counter sums are conserved (§5.4)") {

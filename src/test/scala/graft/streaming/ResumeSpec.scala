@@ -50,15 +50,15 @@ class ResumeSpec extends AnyFunSuite {
       batch("a", 1) + "\n" + batch("a", 2) + "\n" +
         """{"m":[{"t":"2024-01-01T00:00:05Z","m":"counter","h":"a","n":"rx","v":10}]}""" + "\n")
     val q = Ingest.streamDownsampleTo(
-      Wire.metrics(spark.readStream.text(in)), lts, ckpt, watermark = "0 seconds")
+      Wire.metrics(spark.readStream.text(in)), lts, ckpt)
     try { q.processAllAvailable() } finally q.stop()
-    val out = spark.read.parquet(lts)
+    val rollup = spark.read.parquet(lts)
     import org.apache.spark.sql.functions.col
-    val byName = out.collect().map(r =>
+    val byName = Ingest.downsampled(rollup).collect().map(r =>
       r.getAs[String]("name") -> r.getAs[Double]("value")).toMap
     assert(byName("load.1") == 1.5) // avg of gauge 1.0, 2.0
     assert(byName("rx") == 10.0)    // counter sum
-    assert(out.filter(col("date").isNull).count() == 0)
+    assert(rollup.filter(col("date").isNull).count() == 0)
   }
 
   test("LTS downsample stream keeps one row per minute revised across micro-batches") {
@@ -82,9 +82,10 @@ class ResumeSpec extends AnyFunSuite {
       q.processAllAvailable()
       assert(q.recentProgress.count(_.numInputRows > 0) == 2)
     } finally q.stop()
-    val out = spark.read.parquet(lts).collect()
-    // one row per (bucket, type, host, name, tags_key), holding the
-    // revised aggregate, not the first batch's partial beside it
+    val out = Ingest.downsampled(spark.read.parquet(lts)).collect()
+    // the view folds each batch's partial: one row per (bucket, type,
+    // host, name, tags_key), holding the revised aggregate, not the first
+    // batch's partial beside it
     assert(out.length == 2, out.mkString("\n"))
     val byName = out.map(r =>
       r.getAs[String]("name") -> (r.getAs[Double]("value"), r.getAs[Long]("n"))).toMap
