@@ -176,7 +176,7 @@ object SqlFrontDoor {
         |  CAST(SUM(CAST(size(split(text, ' ')) AS BIGINT)) AS DOUBLE)
         |    / COUNT(*) AS avg_tokens
         |FROM corpus_route_docs GROUP BY lang ORDER BY lang""".stripMargin)
-    graft.plans.CorpusRoute.requireEngaged(out, rawCopy, roll)
+    graft.plans.CorpusRoute.requireEngaged(out, roll)
     out
   }
 

@@ -52,7 +52,7 @@ object AsofJoin {
     l2.unionByName(r2, allowMissingColumns = true)
       .withColumn("__match", last(col("__rv"), ignoreNulls = true).over(w))
       .filter(col("__left") === 1)
-      .select(left.columns.map(col) ++
+      .select(left.columns.toSeq.map(col) ++
         valueCols.map(c => col(s"__match.$c").as(c)): _*)
   }
 }

@@ -391,7 +391,7 @@ object TextIndex {
       root: String): Map[String, String] = {
     val df = spark.read.parquet(s"$root/stats")
     if (!df.columns.contains("last_appends")) Map.empty
-    else Option(df.select("last_appends").head.getMap[String, String](0))
+    else Option(df.select("last_appends").head().getMap[String, String](0))
       .map(_.toMap).getOrElse(Map.empty)
   }
 

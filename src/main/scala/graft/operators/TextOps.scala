@@ -3368,14 +3368,6 @@ object TextOps {
       graft.functions.VectorFunctions.xxGram64(tk, lit(k))
   }
 
-  /** Resolve a persisted family name ([[WinnowHash.name]]). */
-  private[graft] def winnowHashByName(name: String): WinnowHash = name match {
-    case WinnowMd5.name => WinnowMd5
-    case WinnowXx.name => WinnowXx
-    case other => throw new IllegalArgumentException(
-      s"unknown winnow hash family '$other'")
-  }
-
   /** The selected (doc_id, pos, fp) set without the presentation sort.
     * `family` picks the gram-hash tier ([[WinnowHash]]) — the selection
     * algorithm is family-independent.

@@ -155,7 +155,7 @@ object TrainedAnn {
   private[graft] def ivfInertia(emb: DataFrame,
       cents: IndexedSeq[Seq[Long]]): (Long, Long) = {
     val r = VectorOps.assignQForTest(VectorOps.quantized(emb), cents)
-      .agg(sum(col("dist_q")), count(lit(1))).head
+      .agg(sum(col("dist_q")), count(lit(1))).head()
     (if (r.isNullAt(0)) 0L else r.getLong(0), r.getLong(1))
   }
 
@@ -166,7 +166,7 @@ object TrainedAnn {
   def buildIvfInto(root: String, emb: DataFrame, k: Int, iters: Int,
       gen: String): Unit = {
     val (cents, assigned) = VectorOps.kmeansFitOver(emb, k, iters, gen)
-    val r = assigned.agg(sum(col("dist_q")), count(lit(1))).head
+    val r = assigned.agg(sum(col("dist_q")), count(lit(1))).head()
     writeModel(root, Model(cents, "ivf_exactsig", Map("k" -> k,
       "iters" -> iters), r.getLong(1),
       if (r.isNullAt(0)) 0L else r.getLong(0)))
@@ -290,7 +290,7 @@ object TrainedAnn {
         element_at(typedlit(cents(s).map(_.toSeq)),
           element_at(col("codes"), s + 1) + 1))
     }.reduce(_ + _)
-    val r = coded.agg(sum(dist), count(lit(1))).head
+    val r = coded.agg(sum(dist), count(lit(1))).head()
     (if (r.isNullAt(0)) 0L else r.getLong(0), r.getLong(1))
   }
 
@@ -314,19 +314,6 @@ object TrainedAnn {
     val ratio = pqDriftRatio(root, embq)
     if (ratio > bound) {
       buildPqInto(root, embq, subs, codes, iters, gen); (ratio, true)
-    } else (ratio, false)
-  }
-
-  /** [[maintainIvfBatch]] at the PQ family — slice-sized probe,
-    * full-corpus refit past the bound.
-    */
-  def maintainPqBatch(root: String, batchQ: DataFrame, fullQ: => DataFrame,
-      subs: Int, codes: Int, iters: Int, gen: String,
-      bound: Double = refitBound): (Double, Boolean) = {
-    recover(root)
-    val ratio = pqDriftRatio(root, batchQ)
-    if (ratio > bound) {
-      buildPqInto(root, fullQ, subs, codes, iters, gen); (ratio, true)
     } else (ratio, false)
   }
 

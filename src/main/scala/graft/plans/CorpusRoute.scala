@@ -1,16 +1,14 @@
 package graft.plans
 
-import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 
 /** [[LtsRoute]]'s materialized-view routing pattern on the LLM-corpus
-  * side (VERDICT r5 #8): per-language/source corpus statistics are the
+  * side: per-language/source corpus statistics are the
   * dashboard queries of a training-data pipeline, recomputed constantly
   * while the corpus changes rarely — exactly the access pattern that
   * justifies a maintained rollup. A registered documents table gets a
@@ -31,15 +29,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
   * Output attribute ids and types are preserved so parent operators
   * never see the difference.
   */
-object CorpusRoute extends Rule[LogicalPlan] {
-
-  /** raw documents root path (fully qualified) → rollup path. */
-  private val routes = TrieMap[String, String]()
-
-  private def canon(spark: SparkSession, path: String): String = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(hp).toString
-  }
+object CorpusRoute extends RollupRoute[String]("lang") {
 
   /** The maintained rollup: one row per (lang, source) with the partial
     * aggregates every routed measure re-aggregates from — additive
@@ -86,17 +76,16 @@ object CorpusRoute extends Rule[LogicalPlan] {
   }
 
   /** Incremental maintenance for an APPEND batch — the BATCH-caller
-    * entry, crash-exact end to end (r15; this retired the r14 CRASH
-    * CAVEAT): the batch's (lang, source) partials land as ledger-tagged
-    * blind segment files by staged write + per-file rename (the
+    * entry, crash-exact end to end: the batch's (lang, source) partials
+    * land as ledger-tagged blind segment files by staged write +
+    * per-file rename (the
     * [[maintainRollup]] machinery — no read of existing state, no delete
     * of live state at ANY crash point), auto-compacted past
     * `maxSegments`, and every routed measure re-aggregates its stored
     * partials at read ([[remerge]]'s algebra inside the rewrite), so
-    * answers are bit-identical to the old read-merge-overwrite. A NULL
-    * lang appends into the default partition like any other — the
-    * overwrite hazard its history used to face is gone with the
-    * overwrite itself.
+    * answers are bit-identical to a read-merge-overwrite. A NULL lang
+    * appends into the default partition like any other: no step
+    * overwrites a partition, so none can lose its rows.
     *
     * Replay protection for AT-LEAST-ONCE callers is the batch LEDGER
     * (the [[QuantileRoute.upsertRollup]] contract, verbatim): marked
@@ -105,12 +94,8 @@ object CorpusRoute extends Rule[LogicalPlan] {
     */
   def upsertRollup(spark: SparkSession, rollupPath: String,
       newDocs: DataFrame, batchTag: Option[(String, String)] = None,
-      maxSegments: Int = 8): Unit = {
-    RouteSupport.ledgeredUpsert(rollupPath, "lang", batchTag, maxSegments,
-      rollupOf(newDocs),
-      owner => compactLangs(spark, rollupPath, maxSegments, Some(owner)),
-      () => invalidate(rollupPath))
-  }
+      maxSegments: Int = 8): Unit =
+    upsert(spark, rollupPath, batchTag, maxSegments, rollupOf(newDocs))(remerge)
 
   /** The per-batch STREAMING maintenance entry
     * ([[graft.streaming.RollupStream.corpusAppendStream]]): the batch's
@@ -118,7 +103,7 @@ object CorpusRoute extends Rule[LogicalPlan] {
     * lang dir (staged write + per-file rename — no read of existing
     * state, O(batch) work however large the rollup), after
     * delete-own-tag and lang-local compaction past `maxSegments`, in
-    * the [[RouteSupport.taggedAppend]] order. Extra segment rows per
+    * the [[RollupRoute.publish]] order. Extra segment rows per
     * group are SOUND for every routed measure because the rewrite
     * itself re-aggregates its partials (counts/sums ADD, mins MIN,
     * maxes MAX, avg = sum/count of folded partials) — the same algebra
@@ -129,57 +114,27 @@ object CorpusRoute extends Rule[LogicalPlan] {
   def maintainRollup(spark: SparkSession, rollupPath: String,
       newDocs: DataFrame, tag: (String, String),
       maxSegments: Int = 8): Unit =
-    RouteSupport.taggedAppend(rollupPath, "lang", Some(tag), maxSegments,
-      rollupOf(newDocs),
-      owner => compactLangs(spark, rollupPath, maxSegments, Some(owner)),
-      () => invalidate(rollupPath))
+    append(spark, rollupPath, Some(tag), maxSegments, rollupOf(newDocs))(remerge)
 
-  /** LANG-local segment compaction: every lang dir past `maxSegments`
-    * files re-folds through the merge algebra ([[remerge]] — the same
-    * multiset of partials, so routed answers are untouched) and swaps
-    * in atomically through the shared crash protocol.
+  /** LANG-local segment compaction through the merge algebra
+    * ([[remerge]]).
     */
   def compactLangs(spark: SparkSession, rollupPath: String,
-      maxSegments: Int = 1, owner: Option[String] = None): Unit = {
-    val (id, sticky) = graft.operators.Artifacts.leaseFor(owner)
-    graft.operators.Artifacts.withLease(rollupPath, id, sticky) {
-      RouteSupport.compactPartitions(spark, rollupPath, "lang",
-        maxSegments)(remerge)
-      invalidate(rollupPath)
-    }
-  }
-
-  /** MAX parquet file count across lang dirs — the segment proxy a
-    * continuous maintainer bounds.
-    */
-  private[graft] def rollupSegments(rollupPath: String): Int =
-    RouteSupport.foldableSegments(rollupPath, "lang")
+      maxSegments: Int = 1, owner: Option[String] = None): Unit =
+    compact(spark, rollupPath, maxSegments, owner)(remerge)
 
   def register(spark: SparkSession, rawPath: String, rollupPath: String): Unit =
-    routes.put(canon(spark, rawPath), rollupPath): Unit
+    addRoute(spark, rawPath, rollupPath)
 
-  /** Driver-checked routed corpus stats (`q_route_stats`): build — once
-    * per dataset fingerprint, an ingest-time artifact like the tag/ANN
-    * indexes — a private copy of the documents table plus its
-    * [[rollupOf]] rollup under /tmp/graft-index, register copy→rollup,
-    * and run the textStats aggregate over the COPY. The builder
-    * `require`s that the optimizer actually served the plan from the
-    * rollup, and the driver's DuckDB oracle computes the same stats
-    * from the ORIGINAL raw table — a green row is an end-to-end proof
-    * that MV routing is bit-identical under the external gate. A
-    * production deployment registers the real table path; the private
-    * copy here only keeps the route's session-global scope from
-    * silently rerouting the other declared queries mid-bench (routing
-    * them would be correct, but would change what the bench measures).
-    */
   /** Build (once per dataset fingerprint) and register the
     * [[routedStats]] artifacts — called from `SparkEntry.prepare` so the
     * copy/rollup writes are ingest-time costs, not bench time. Returns
     * the (rawCopy, rollup) paths.
     */
   def ensureArtifacts(spark: SparkSession, dir: String): (String, String) = {
-    // v2: rollup schema grew avg/min/max partials in r7 and is stored
-    // lang-partitioned for upsertRollup — pre-r7 artifacts must rebuild.
+    // the rollup schema carries avg/min/max partials and is stored
+    // lang-partitioned for upsertRollup; the `_v2` name keeps an artifact
+    // of the older layout from being served.
     // The root is the ONE shared fingerprint-keyed recipe
     // (the index family's [[graft.operators.Artifacts.datasetRoot]]),
     // so a cache-layout change can never miss this family.
@@ -187,16 +142,13 @@ object CorpusRoute extends Rule[LogicalPlan] {
       "corpus_route_v2")
     val rawCopy = s"$base/documents"
     val roll = s"$base/rollup"
-    // the shared two-JVM-safe tmp-build + atomic-rename publish (r13 —
-    // the bare _SUCCESS-check + overwrite it replaced could interleave
-    // two processes' writes into one torn copy/rollup pair; every other
-    // fingerprint-keyed artifact already publishes through ensureRoot)
+    // the two-JVM-safe tmp-build + atomic-rename publish: two processes
+    // never interleave their writes into one torn copy/rollup pair.
     // `existed` must use ensureRoot's EXACT servability predicate
     // (root marker + both artifacts): a weaker check (rollup marker
     // alone) would skip the invalidate below when ensureRoot decides to
-    // rebuild anyway — e.g. over a pre-r13-layout artifact with no root
-    // marker — leaving a stale cached relation listing deleted files
-    // (review-found, r13)
+    // rebuild anyway, leaving a stale cached relation listing deleted
+    // files
     def complete(p: String): Boolean =
       new java.io.File(s"$p/documents/_SUCCESS").exists() &&
         new java.io.File(s"$p/rollup/_SUCCESS").exists()
@@ -208,14 +160,23 @@ object CorpusRoute extends Rule[LogicalPlan] {
       rollupOf(spark.read.parquet(s"$tmp/documents")).coalesce(1)
         .write.partitionBy("lang").parquet(s"$tmp/rollup")
     }
-    this.synchronized {
-      if (!existed) invalidate(roll)
-      enable(spark)
-      register(spark, rawCopy, roll)
-    }
+    install(spark, roll, rebuilt = !existed)(register(spark, rawCopy, roll))
     (rawCopy, roll)
   }
 
+  /** Oracle-checked routed corpus stats (`q_route_stats`): build — once
+    * per dataset fingerprint, an ingest-time artifact like the tag/ANN
+    * indexes — a private copy of the documents table plus its
+    * [[rollupOf]] rollup under /tmp/graft-index, register copy→rollup,
+    * and run the textStats aggregate over the COPY. It `require`s that
+    * the optimizer actually served the plan from the rollup, and the
+    * DuckDB oracle computes the same stats from the ORIGINAL raw table — a green row is an end-to-end proof
+    * that MV routing is bit-identical under the external gate. A
+    * production deployment registers the real table path; the private
+    * copy here only keeps the route's session-global scope from
+    * silently rerouting the other declared queries mid-bench (routing
+    * them would be correct, but would change what the bench measures).
+    */
   def routedStats(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val (rawCopy, roll) = ensureArtifacts(spark, dir)
@@ -226,102 +187,23 @@ object CorpusRoute extends Rule[LogicalPlan] {
         sum(col("n_chars")).as("total_chars"),
         (sum(col("n_tokens")).cast("double") / count(lit(1))).as("avg_tokens"))
       .orderBy("lang")
-    requireEngaged(out, rawCopy, roll)
+    requireEngaged(out, roll)
     out
   }
 
-  /** Loud engagement check — a declared routed query must FAIL if the
-    * optimizer stopped serving it from the rollup (shared by the DSL
-    * and SQL faces).
-    */
-  def requireEngaged(df: DataFrame, rawCopy: String,
-      rollupPath: String): Unit = {
-    val engaged = df.queryExecution.optimizedPlan.collect {
-      case lr: LogicalRelation => lr.relation match {
-        case h: HadoopFsRelation =>
-          h.location.rootPaths.exists(_.toString.contains(rollupPath))
-        case _ => false
-      }
-    }.exists(identity)
-    require(engaged,
-      s"corpus route failed to engage for $rawCopy -> $rollupPath:\n" +
-        df.queryExecution.optimizedPlan)
-  }
-
-  def deregister(spark: SparkSession, rawPath: String): Unit =
-    routes.remove(canon(spark, rawPath)): Unit
-
-  /** Idempotently attach the rule to a live session. */
-  def enable(spark: SparkSession): Unit = this.synchronized {
-    if (!spark.experimental.extraOptimizations.exists(_ eq this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
-
-  // resolved-once rollup relations (shared scaffold — residue-gated on
-  // a cache miss since lang-dir swaps exist, r14)
-  private val rollupRelations = new RouteSupport.RelationCache("lang")
-
-  /** Drop the cached relation for a rollup whose files were rewritten. */
-  def invalidate(rollupPath: String): Unit =
-    rollupRelations.invalidate(rollupPath)
-
-  private def rollupRelationFor(path: String): Option[LogicalRelation] =
-    rollupRelations.relationFor(path)
-
-  private def routeFor(lr: LogicalRelation): Option[String] =
-    lr.relation match {
-      case h: HadoopFsRelation if h.location.rootPaths.size == 1 =>
-        routes.get(h.location.rootPaths.head.toString)
-      case _ => None
-    }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case agg: Aggregate => rewrite(agg).getOrElse(agg)
-  }
-
-  /** Same Project-inlining dance as [[LtsRoute.rewrite]]: the optimizer
-    * pulls complex groupings/derived columns into a child Project, so
-    * aliases inline back before matching against the raw columns.
-    */
-  private def rewrite(agg: Aggregate): Option[LogicalPlan] = agg.child match {
-    case lr: LogicalRelation =>
-      routeFor(lr).flatMap(buildRewrite(agg, lr, _))
-    case Project(projList, lr: LogicalRelation) =>
-      val aliasOf = projList.collect {
-        case al: Alias => al.toAttribute.exprId -> al.child
-      }.toMap
-      def inline(e: Expression): Expression = e.transformUp {
-        case a: AttributeReference if aliasOf.contains(a.exprId) => aliasOf(a.exprId)
-      }
-      val inlined = Aggregate(
-        agg.groupingExpressions.map(inline),
-        agg.aggregateExpressions.map(ne => inline(ne) match {
-          case n: NamedExpression => n
-          case other => Alias(other, ne.name)(exprId = ne.exprId)
-        }),
-        lr)
-      routeFor(lr).flatMap(buildRewrite(inlined, lr, _))
-    case _ => None
-  }
+  protected def rollupPath(rollupPath: String): String = rollupPath
+  protected def buildZone(rollupPath: String): Option[String] = None
+  protected val requiredColumns: Seq[String] = Seq("lang", "source",
+    "n_docs", "n_text", "n_nchars", "sum_chars", "sum_tokens", "min_chars",
+    "max_chars", "min_tokens", "max_tokens")
 
   private val dims = Set("lang", "source")
 
-  private def buildRewrite(agg: Aggregate, lr: LogicalRelation,
-      rollupPath: String): Option[LogicalPlan] = {
-    val rollRel = rollupRelationFor(rollupPath).getOrElse(return None)
-    val roll: Map[String, Attribute] = rollRel.output.map(a => a.name -> a).toMap
-    if (!Seq("lang", "source", "n_docs", "n_text", "n_nchars", "sum_chars",
-        "sum_tokens", "min_chars", "max_chars", "min_tokens", "max_tokens")
-      .forall(roll.contains)) return None
-    val rawName: Map[ExprId, String] = lr.output.map(a => a.exprId -> a.name).toMap
-    var ok = true
-    def fail(): Expression = { ok = false; Literal(null) }
-
-    def isRawAttr(e: Expression, name: String): Boolean = e match {
-      case a: AttributeReference => rawName.get(a.exprId).contains(name)
-      case _ => false
-    }
+  protected def buildRewrite(agg: Aggregate, lr: LogicalRelation,
+      roll: Map[String, Attribute], rollupPath: String)
+      : Option[(Seq[Expression], Seq[NamedExpression])] = {
+    def isRawAttr(e: Expression, name: String) =
+      RouteSupport.rawColumn(lr, e).contains(name)
 
     // Average routes to Divide(sum partial, count partial) — null on an
     // all-null/empty input like the original (Sum of an empty group is
@@ -343,81 +225,46 @@ object CorpusRoute extends Rule[LogicalPlan] {
       case _ => false
     }
 
-    def rw(e: Expression): Expression = e match {
-      case ae: AggregateExpression if !ae.isDistinct && ae.filter.isEmpty =>
-        ae.aggregateFunction match {
-          // count(*) / count(non-null literal) → sum(n_docs), coalesced so
-          // the empty-relation global aggregate still answers 0
-          case c: Count if c.children.forall(ch => ch.foldable && ch.eval() != null) =>
-            Coalesce(Seq(
-              ae.copy(aggregateFunction = Sum(roll("n_docs").asInstanceOf[Expression])),
-              Literal(0L)))
-          // count(text) — non-null-text document count
-          case c: Count if c.children.size == 1 && isRawAttr(c.children.head, "text") =>
-            Coalesce(Seq(
-              ae.copy(aggregateFunction = Sum(roll("n_text").asInstanceOf[Expression])),
-              Literal(0L)))
-          case s: Sum if isRawAttr(s.child, "n_chars") =>
-            ae.copy(aggregateFunction =
-              s.withNewChildren(Seq(roll("sum_chars"))).asInstanceOf[Sum])
-          case s: Sum if isTokenCount(s.child) =>
-            ae.copy(aggregateFunction =
-              s.withNewChildren(Seq(roll("sum_tokens"))).asInstanceOf[Sum])
-          // avg(x) = Sum(x)/Count(x): the routed sum re-aggregates the
-          // group partials EXACTLY (long addition) where the raw plan
-          // accumulates doubles row-wise — identical while totals stay
-          // under 2^53 (nonnegative longs; every partial ≤ the total),
-          // i.e. everywhere double avg itself is exact. Two fresh
-          // AggregateExpressions (fresh resultIds — reusing ae's id for
-          // both would alias two different aggregates).
-          case a: Average if isRawAttr(a.child, "n_chars") =>
-            routedAvg(ae, roll("sum_chars"), roll("n_nchars"))
-          case a: Average if isTokenCount(a.child) =>
-            routedAvg(ae, roll("sum_tokens"), roll("n_text"))
-          // order statistics re-aggregate through their own partials
-          case mn: Min if isRawAttr(mn.child, "n_chars") =>
-            ae.copy(aggregateFunction = Min(roll("min_chars")))
-          case mn: Min if isTokenCount(mn.child) =>
-            ae.copy(aggregateFunction = Min(roll("min_tokens")))
-          case mx: Max if isRawAttr(mx.child, "n_chars") =>
-            ae.copy(aggregateFunction = Max(roll("max_chars")))
-          case mx: Max if isTokenCount(mx.child) =>
-            ae.copy(aggregateFunction = Max(roll("max_tokens")))
-          case _ => fail()
-        }
-      // FILTER / DISTINCT / other functions kill the rewrite outright —
-      // the generic child-walk below must never reach their arguments
-      case _: AggregateExpression => fail()
-      case a: AttributeReference =>
-        rawName.get(a.exprId).filter(dims.contains).flatMap(roll.get)
-          .getOrElse(fail())
-      case _: Literal => e
-      // nondeterministic expressions (rand() groupings and friends) draw
-      // once per INPUT row — rerouting them to the rollup would redraw
-      // over ~#langs×#sources rows instead of the corpus, silently
-      // changing results. Spark's own rewrites gate the same way.
-      case other if !other.deterministic => fail()
-      case other if other.children.nonEmpty => other.mapChildren(rw)
-      case _ => fail()
-    }
-
-    val newGroupings = agg.groupingExpressions.map(rw)
-    val newAggExprs: Seq[NamedExpression] = agg.aggregateExpressions.map {
-      case a: AttributeReference =>
-        rawName.get(a.exprId).filter(dims.contains).flatMap(roll.get) match {
-          case Some(m) => Alias(m, a.name)(exprId = a.exprId)
-          case None => ok = false; a
-        }
-      case al: Alias =>
-        Alias(rw(al.child), al.name)(exprId = al.exprId, qualifier = al.qualifier)
-      case other => rw(other) match {
-        case ne: NamedExpression => ne
-        case _ => ok = false; other
+    reaggregate(agg, lr)(n => Some(n).filter(dims.contains).flatMap(roll.get), {
+      case ae: AggregateExpression => Some(ae.aggregateFunction).collect {
+        // count(*) / count(non-null literal) → sum(n_docs), coalesced so
+        // the empty-relation global aggregate still answers 0
+        case c: Count if c.children.forall(ch => ch.foldable && ch.eval() != null) =>
+          Coalesce(Seq(
+            ae.copy(aggregateFunction = Sum(roll("n_docs").asInstanceOf[Expression])),
+            Literal(0L)))
+        // count(text) — non-null-text document count
+        case c: Count if c.children.size == 1 && isRawAttr(c.children.head, "text") =>
+          Coalesce(Seq(
+            ae.copy(aggregateFunction = Sum(roll("n_text").asInstanceOf[Expression])),
+            Literal(0L)))
+        case s: Sum if isRawAttr(s.child, "n_chars") =>
+          ae.copy(aggregateFunction =
+            s.withNewChildren(Seq(roll("sum_chars"))).asInstanceOf[Sum])
+        case s: Sum if isTokenCount(s.child) =>
+          ae.copy(aggregateFunction =
+            s.withNewChildren(Seq(roll("sum_tokens"))).asInstanceOf[Sum])
+        // avg(x) = Sum(x)/Count(x): the routed sum re-aggregates the
+        // group partials EXACTLY (long addition) where the raw plan
+        // accumulates doubles row-wise — identical while totals stay
+        // under 2^53 (nonnegative longs; every partial ≤ the total),
+        // i.e. everywhere double avg itself is exact. Two fresh
+        // AggregateExpressions (fresh resultIds — reusing ae's id for
+        // both would alias two different aggregates).
+        case a: Average if isRawAttr(a.child, "n_chars") =>
+          routedAvg(ae, roll("sum_chars"), roll("n_nchars"))
+        case a: Average if isTokenCount(a.child) =>
+          routedAvg(ae, roll("sum_tokens"), roll("n_text"))
+        // order statistics re-aggregate through their own partials
+        case mn: Min if isRawAttr(mn.child, "n_chars") =>
+          ae.copy(aggregateFunction = Min(roll("min_chars")))
+        case mn: Min if isTokenCount(mn.child) =>
+          ae.copy(aggregateFunction = Min(roll("min_tokens")))
+        case mx: Max if isRawAttr(mx.child, "n_chars") =>
+          ae.copy(aggregateFunction = Max(roll("max_chars")))
+        case mx: Max if isTokenCount(mx.child) =>
+          ae.copy(aggregateFunction = Max(roll("max_tokens")))
       }
-    }
-    val leftover = (newGroupings ++ newAggExprs)
-      .flatMap(_.references).exists(lr.outputSet.contains)
-    if (ok && !leftover) Some(Aggregate(newGroupings, newAggExprs, rollRel))
-    else None
+    })
   }
 }

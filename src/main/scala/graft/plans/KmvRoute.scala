@@ -1,16 +1,14 @@
 package graft.plans
 
-import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType}
 import graft.functions.{KmvAgg, KmvMergeAgg}
 
-/** SKETCH-PARTIAL materialized-view routing (r13) — [[CorpusRoute]]'s
+/** SKETCH-PARTIAL materialized-view routing — [[CorpusRoute]]'s
   * pattern extended past re-aggregable integers to a MERGEABLE SKETCH:
   * the per-day distinct-users panel (q_distinct_approx — the dashboard
   * query of the event surface) recomputes a KMV sketch over the corpus
@@ -38,17 +36,18 @@ import graft.functions.{KmvAgg, KmvMergeAgg}
   * extra measures, filters/distinct — leaves the plan untouched and
   * scans raw, the [[CorpusRoute]]/[[LtsRoute]] conservatism.
   */
-object KmvRoute extends Rule[LogicalPlan] {
+object KmvRoute extends RollupRoute[(String, Int, String)]("day") {
 
-  /** raw events root path (fully qualified) → (rollup path, sketch k,
-    * BUILD TIMEZONE). The zone rides along because the rollup's day
-    * grain is `to_date(ts)` — a timezone-DEPENDENT cast: states built
-    * under zone X answer day-bucket questions asked under zone X only.
-    * A session with a different `spark.sql.session.timeZone` must scan
-    * raw (correct, conservative), never silently read build-zone
-    * buckets (review-found, r13 ADVICE).
+  /** A route's target: (rollup path, sketch k, BUILD TIMEZONE). The zone
+    * rides along because the rollup's day grain is `to_date(ts)` — a
+    * timezone-DEPENDENT cast: states built under zone X answer day-bucket
+    * questions asked under zone X only, so a session with a different
+    * `spark.sql.session.timeZone` scans raw.
     */
-  private val routes = TrieMap[String, (String, Int, String)]()
+  protected def rollupPath(t: (String, Int, String)): String = t._1
+  protected def buildZone(t: (String, Int, String)): Option[String] =
+    Some(t._3)
+  protected val requiredColumns: Seq[String] = Seq("day", "state")
 
   /** The maintained rollup: one row per day with the KMV partial state
     * of the day's user hashes — the EXACT sketch family (md5 60-bit
@@ -65,17 +64,15 @@ object KmvRoute extends Rule[LogicalPlan] {
   }
 
   /** Incremental maintenance for an APPEND batch — the BATCH-caller
-    * entry, crash-exact end to end (r15; this retired the r14 CRASH
-    * CAVEAT): the batch's per-day states land as blind segment files by
-    * staged write + per-file rename (the [[appendRollup]] machinery —
-    * no read of existing state, no delete of live state at ANY crash
-    * point), auto-compacted past `maxSegments`, and the route's
-    * [[graft.functions.KmvMergeAgg]] re-merge folds segments back to
-    * the day's k-minima at read — bit-identical to the old
-    * read-merge-overwrite by merge-closure. The NULL day appends like
-    * any other touched day; the existing null-day state is simply
-    * never touched (the r13-ADVICE overwrite hazard is gone with the
-    * overwrite itself).
+    * entry, crash-exact end to end: the batch's per-day states land as
+    * blind segment files by staged write + per-file rename (the
+    * [[appendRollup]] machinery — no read of existing state, no delete
+    * of live state at ANY crash point), auto-compacted past
+    * `maxSegments`, and the route's [[graft.functions.KmvMergeAgg]]
+    * re-merge folds segments back to the day's k-minima at read —
+    * bit-identical to a read-merge-overwrite by merge-closure. The NULL
+    * day appends like any other touched day; no step overwrites a day,
+    * so the stored null-day state is never lost.
     *
     * Replay-exactness needs NO ledger here — KMV states are
     * multiplicity-invariant, so ANY re-delivery (even of a batch a
@@ -88,14 +85,9 @@ object KmvRoute extends Rule[LogicalPlan] {
   def upsertRollup(spark: SparkSession, rollupPath: String,
       newEvents: DataFrame, k: Int,
       batchTag: Option[(String, String)] = None,
-      maxSegments: Int = 8): Unit = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
-    RouteSupport.requireWriteZone(spark, rollupPath, "kmv rollup")
-    RouteSupport.ledgeredUpsert(rollupPath, "day", batchTag, maxSegments,
-      rollupOf(newEvents, k),
-      owner => compactDays(spark, rollupPath, k, maxSegments, Some(owner)),
-      () => invalidate(rollupPath))
-  }
+      maxSegments: Int = 8): Unit =
+    upsert(spark, rollupPath, batchTag, maxSegments,
+      rollupOf(newEvents, k))(remerge(k))
 
   /** BLIND segment append — the streaming maintenance entry's write
     * half ([[graft.streaming.RollupStream.kmvAppendStream]]): the
@@ -114,12 +106,11 @@ object KmvRoute extends Rule[LogicalPlan] {
       newEvents: DataFrame, k: Int): Unit = {
     require(new java.io.File(rollupPath).isDirectory,
       s"appendRollup on $rollupPath with no rollup — build it first")
-    RouteSupport.requireWriteZone(spark, rollupPath, "kmv rollup")
     // untagged entry — scoped unique-owner lease: excludes OVERLAPPING
     // maintenance (the physical swap/rename races), while KMV's
     // multiplicity-invariance needs no standing replay window
-    RouteSupport.taggedAppend(rollupPath, "day", None, Int.MaxValue,
-      rollupOf(newEvents, k), _ => (), () => invalidate(rollupPath))
+    append(spark, rollupPath, None, Int.MaxValue,
+      rollupOf(newEvents, k))(remerge(k))
   }
 
   /** The per-batch STREAMING maintenance entry: day-local compaction
@@ -129,49 +120,31 @@ object KmvRoute extends Rule[LogicalPlan] {
     * economy.
     */
   def maintainRollup(spark: SparkSession, rollupPath: String,
-      newEvents: DataFrame, k: Int, maxSegments: Int = 8): Unit = {
-    RouteSupport.requireWriteZone(spark, rollupPath, "kmv rollup")
-    RouteSupport.taggedAppend(rollupPath, "day", None, maxSegments,
-      rollupOf(newEvents, k),
-      _ => compactDays(spark, rollupPath, k, maxSegments),
-      () => invalidate(rollupPath))
-  }
+      newEvents: DataFrame, k: Int, maxSegments: Int = 8): Unit =
+    append(spark, rollupPath, None, maxSegments,
+      rollupOf(newEvents, k))(remerge(k))
 
-  /** DAY-local segment compaction: every day dir past `maxSegments`
-    * files re-sketches the union of its stored minima back to one state
-    * row ([[upsertRollup]]'s explode-and-refold algebra — a stored
-    * state's elements ARE hash values, and k-minima of unioned k-minima
-    * sets equal the global k-minima) and swaps in atomically through
-    * the shared crash protocol.
-    */
+  /** DAY-local segment compaction through [[remerge]]. */
   def compactDays(spark: SparkSession, rollupPath: String, k: Int,
-      maxSegments: Int = 1, owner: Option[String] = None): Unit = {
-    import org.apache.spark.sql.functions._
-    graft.functions.VectorFunctions.ensureRegistered(spark)
-    val (id, sticky) = graft.operators.Artifacts.leaseFor(owner)
-    graft.operators.Artifacts.withLease(rollupPath, id, sticky) {
-      RouteSupport.compactPartitions(spark, rollupPath, "day", maxSegments)(
-        _.select(col("day"), explode(col("state")).as("h"))
-          .groupBy("day")
-          .agg(graft.functions.VectorFunctions.kmvStateExact(col("h"), k)
-            .as("state")))
-      invalidate(rollupPath)
-    }
-  }
+      maxSegments: Int = 1, owner: Option[String] = None): Unit =
+    compact(spark, rollupPath, maxSegments, owner)(remerge(k))
 
-  /** MAX parquet file count across day dirs — the segment proxy a
-    * continuous maintainer bounds.
+  /** Re-sketch the union of a day's stored minima back to one state row:
+    * a stored state's elements ARE hash values, and the k-minima of
+    * unioned k-minima sets equal the global k-minima.
     */
-  private[graft] def rollupSegments(rollupPath: String): Int =
-    RouteSupport.foldableSegments(rollupPath, "day")
+  private def remerge(k: Int)(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    graft.functions.VectorFunctions.ensureRegistered(df.sparkSession)
+    df.select(col("day"), explode(col("state")).as("h"))
+      .groupBy("day")
+      .agg(graft.functions.VectorFunctions.kmvStateExact(col("h"), k)
+        .as("state"))
+  }
 
   def register(spark: SparkSession, rawPath: String, rollupPath: String,
       k: Int): Unit =
-    routes.put(RouteSupport.canon(spark, rawPath),
-      (rollupPath, k, RouteSupport.sessionZone(spark))): Unit
-
-  def deregister(spark: SparkSession, rawPath: String): Unit =
-    routes.remove(RouteSupport.canon(spark, rawPath)): Unit
+    addRoute(spark, rawPath, (rollupPath, k, RouteSupport.sessionZone(spark)))
 
   /** Build (once per dataset fingerprint, at ingest) the per-day state
     * rollup for the REAL events table, register raw→rollup, and enable
@@ -182,91 +155,24 @@ object KmvRoute extends Rule[LogicalPlan] {
   def ensureArtifacts(spark: SparkSession, dir: String,
       k: Int = graft.operators.EventOps.kmvOracleK): String = {
     // zone-keyed, _meta-pinned, two-JVM-safe — the shared
-    // [[RouteSupport.zonedRollupEnsure]] scaffold (the r13-ADVICE zone
-    // discipline lives there once for every day-grain route)
+    // [[RouteSupport.zonedRollupEnsure]] scaffold (the zone discipline
+    // lives there once for every day-grain route)
     val (roll, existed) = RouteSupport.zonedRollupEnsure(spark, dir,
       s"kmv_route_v1_k$k") { tmp =>
       rollupOf(graft.Tables.events(spark, dir), k).coalesce(1)
         .write.partitionBy("day").parquet(s"$tmp/rollup")
     }
-    this.synchronized {
-      // drop the cached relation only when this call (re)built — a
-      // per-query invalidate would force relation re-resolution on
-      // every routed query for nothing
-      if (!existed) invalidate(roll)
-      enable(spark)
-      register(spark, s"$dir/events.parquet", roll, k)
-    }
+    install(spark, roll, rebuilt = !existed)(
+      register(spark, s"$dir/events.parquet", roll, k))
     roll
   }
 
-  /** Loud engagement check (the [[CorpusRoute.routedStats]] posture): a
-    * declared routed query must FAIL if the optimizer stopped serving it
-    * from the rollup, never silently fall back to the corpus scan.
-    */
-  def requireEngaged(df: DataFrame, rollupPath: String): Unit = {
-    val engaged = df.queryExecution.optimizedPlan.collect {
-      case lr: LogicalRelation => lr.relation match {
-        case h: HadoopFsRelation =>
-          h.location.rootPaths.exists(_.toString.contains(rollupPath))
-        case _ => false
-      }
-    }.exists(identity)
-    require(engaged, s"kmv route failed to engage for $rollupPath:\n" +
-      df.queryExecution.optimizedPlan)
-  }
-
-  /** Idempotently attach the rule to a live session. */
-  def enable(spark: SparkSession): Unit = this.synchronized {
-    if (!spark.experimental.extraOptimizations.exists(_ eq this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
-
-  // resolved-once rollup relations (shared scaffold)
-  private val rollupRelations = new RouteSupport.RelationCache("day")
-
-  /** Drop the cached relation for a rollup whose files were rewritten. */
-  def invalidate(rollupPath: String): Unit =
-    rollupRelations.invalidate(rollupPath)
-
-  private def routeFor(lr: LogicalRelation): Option[(String, Int, String)] =
-    lr.relation match {
-      case h: HadoopFsRelation if h.location.rootPaths.size == 1 =>
-        routes.get(h.location.rootPaths.head.toString)
-      case _ => None
-    }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case agg: Aggregate => rewrite(agg).getOrElse(agg)
-  }
-
-  /** Same Project-inlining dance as [[CorpusRoute.rewrite]] (the
-    * shared [[RouteSupport.inlineProject]] preamble).
-    */
-  private def rewrite(agg: Aggregate): Option[LogicalPlan] = agg.child match {
-    case lr: LogicalRelation =>
-      routeFor(lr).flatMap { case (p, k, z) => buildRewrite(agg, lr, p, k, z) }
-    case Project(projList, lr: LogicalRelation) =>
-      routeFor(lr).flatMap { case (p, k, z) =>
-        buildRewrite(RouteSupport.inlineProject(agg, projList, lr),
-          lr, p, k, z) }
-    case _ => None
-  }
-
-  private def buildRewrite(agg: Aggregate, lr: LogicalRelation,
-      rollupPath: String, k: Int, buildZone: String): Option[LogicalPlan] = {
-    // decline for a session whose zone differs from the rollup's build
-    // zone: its to_date(ts) grain is a DIFFERENT grouping than the
-    // stored day buckets — the raw scan is the correct answer there
-    if (conf.sessionLocalTimeZone != buildZone) return None
-    val rollRel = rollupRelations.relationFor(rollupPath).getOrElse(return None)
-    val roll: Map[String, Attribute] = rollRel.output.map(a => a.name -> a).toMap
-    if (!Seq("day", "state").forall(roll.contains)) return None
-    val m = RouteSupport.TsMatchers(
-      lr.output.map(a => a.exprId -> a.name).toMap, buildZone)
+  protected def buildRewrite(agg: Aggregate, lr: LogicalRelation,
+      roll: Map[String, Attribute], t: (String, Int, String))
+      : Option[(Seq[Expression], Seq[NamedExpression])] = {
+    val (_, k, buildZone) = t
+    val m = RouteSupport.TsMatchers(lr, buildZone)
     import m.{isRawAttr, isDayOfTs}
-
     // the exact h60-of-user_id chain q_distinct_approx hashes with
     // (TextOps.h60): conv(substring(md5(user_id::string::binary),1,15),
     // 16,10)::long — a drifted hash must NOT route (different minima)
@@ -322,10 +228,6 @@ object KmvRoute extends Rule[LogicalPlan] {
       // anything else conservatively stays raw
       case other => ok = false; other
     }
-    val leftover = newAggExprs
-      .flatMap(_.references).exists(lr.outputSet.contains)
-    if (ok && !leftover)
-      Some(Aggregate(Seq(roll("day")), newAggExprs, rollRel))
-    else None
+    if (ok) Some((Seq(roll("day")), newAggExprs)) else None
   }
 }

@@ -1,12 +1,10 @@
 package graft.plans
 
-import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Sum}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types.{DecimalType, StringType}
 
 /** LTS query routing (SURVEY.md §4; ref: res/schema.sql:22-37,54-69): the
@@ -31,13 +29,10 @@ import org.apache.spark.sql.types.{DecimalType, StringType}
   * decimal precision, replaced dimension attrs re-aliased under their old
   * exprIds) so parent operators never see the difference.
   *
-  * Activate with [[enable]] (`spark.experimental.extraOptimizations`) or
-  * via `spark.sql.extensions=graft.functions.GraftExtensions`.
+  * Activate with [[enable]] or via
+  * `spark.sql.extensions=graft.functions.GraftExtensions`.
   */
-object LtsRoute extends Rule[LogicalPlan] {
-
-  /** raw-table root path (fully qualified) → LTS rollup path. */
-  private val routes = TrieMap[String, String]()
+object LtsRoute extends RollupRoute[String]("date") {
 
   /** Register a raw→LTS route; the LTS table must be the minute rollup of
     * the raw table ([[graft.streaming.Ingest.ltsRollup]]): (bucket,
@@ -45,59 +40,22 @@ object LtsRoute extends Rule[LogicalPlan] {
     * and `n`.
     */
   def register(spark: SparkSession, rawPath: String, ltsPath: String): Unit =
-    routes.put(RouteSupport.canon(spark, rawPath), ltsPath): Unit
+    addRoute(spark, rawPath, ltsPath)
 
-  def deregister(spark: SparkSession, rawPath: String): Unit =
-    routes.remove(RouteSupport.canon(spark, rawPath)): Unit
-
-  /** Idempotently attach the rule to a live session. */
-  def enable(spark: SparkSession): Unit = this.synchronized {
-    if (!spark.experimental.extraOptimizations.exists(_ eq this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
+  protected def rollupPath(ltsPath: String): String = ltsPath
+  protected def buildZone(ltsPath: String): Option[String] = None
+  protected val requiredColumns: Seq[String] = Seq("bucket", "sum_value", "n")
 
   // truncation units that are coarser-or-equal to the rollup's minute grain
   private val coarseUnits =
     Set("minute", "hour", "day", "week", "month", "quarter", "year")
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case agg: Aggregate => rewrite(agg).getOrElse(agg)
-  }
-
-  private def routeFor(lr: LogicalRelation): Option[String] =
-    lr.relation match {
-      // single-root only: a multi-path scan mixes registered and foreign
-      // data, and routing it would drop the other paths' rows
-      case h: HadoopFsRelation if h.location.rootPaths.size == 1 =>
-        routes.get(h.location.rootPaths.head.toString)
-      case _ => None
-    }
-
-  // analyzed rollup relations, resolved once per path (the optimizer calls
-  // this rule per query — re-listing files there would be blocking I/O in
-  // every plan); newInstance() refreshes exprIds per use so two routed
-  // aggregates in one query never collide. Shared scaffold (r14): the
-  // maintainer's date-local compaction commits through date-dir
-  // aside-rename swaps, so a cache miss must decline to route while
-  // crashed-swap residue exists — a fresh listing would silently drop
-  // (or string-infer) the aside day.
-  private val ltsRelations = new RouteSupport.RelationCache("date")
-
-  /** Drop the cached relation for a route target whose FILES changed —
-    * a streaming-maintained rollup ([[maintainRollup]]) publishes new
-    * segment files every micro-batch and compacts date dirs now and
-    * then, and a stale cached file listing would miss the new segments
-    * or route queries onto deleted files.
-    */
-  def invalidate(ltsPath: String): Unit = ltsRelations.invalidate(ltsPath)
 
   /** The per-batch entry of a streaming-maintained rollup
     * ([[graft.streaming.Ingest.streamLtsRollupTo]]): the batch's
     * [[graft.streaming.Ingest.ltsRollup]] rows, dated by their bucket's
     * UTC epoch-day, land as ONE tagged segment file per touched `date=`
     * dir through the shared tagged-segment protocol
-    * ([[RouteSupport.taggedAppend]]: lease, recover, delete-own-tag,
+    * ([[RollupRoute.publish]]: lease, recover, delete-own-tag,
     * date-local compaction past 8 segments, staged publish,
     * invalidate). No state store and no rewrite of stored rows: a late
     * row just adds a partial for its minute in a later segment, and the
@@ -121,11 +79,9 @@ object LtsRoute extends Rule[LogicalPlan] {
     requireFeeder(ltsPath, tag._1, claim = false)
     graft.operators.Artifacts.withLease(ltsPath, owner, sticky) {
       requireFeeder(ltsPath, tag._1, claim = true)
-      RouteSupport.taggedAppend(ltsPath, "date", Some(tag), 8,
-        Ingest.ltsRollup(metrics, dims).withColumn("date", Ingest.utcEpochDay),
-        _ => RouteSupport.compactPartitions(metrics.sparkSession, ltsPath,
-          "date", 8)(remerge),
-        () => invalidate(ltsPath))
+      append(metrics.sparkSession, ltsPath, Some(tag), 8,
+        Ingest.ltsRollup(metrics, dims)
+          .withColumn("date", Ingest.utcEpochDay))(remerge)
     }
   }
 
@@ -166,103 +122,49 @@ object LtsRoute extends Rule[LogicalPlan] {
     import org.apache.spark.sql.functions.{col, sum}
     val measures = graft.streaming.Ingest.ltsMeasures
     val folded = measures.map(m => sum(col(m)).cast(df.schema(m).dataType).as(m))
-    df.groupBy(df.columns.filterNot(measures.contains).map(col): _*)
+    df.groupBy(df.columns.toSeq.filterNot(measures.contains).map(col): _*)
       .agg(folded.head, folded.tail: _*)
   }
 
-  /** Match Aggregate over the registered relation, after the shared
-    * Project-inlining preamble ([[RouteSupport.inlineProject]]).
-    */
-  private def rewrite(agg: Aggregate): Option[LogicalPlan] = agg.child match {
-    case lr: LogicalRelation =>
-      routeFor(lr).flatMap(buildRewrite(agg, lr, _))
-    case Project(projList, lr: LogicalRelation) =>
-      routeFor(lr).flatMap(
-        buildRewrite(RouteSupport.inlineProject(agg, projList, lr), lr, _))
-    case _ => None
-  }
-
-  private def buildRewrite(agg: Aggregate, lr: LogicalRelation,
-      ltsPath: String): Option[LogicalPlan] = {
-    val ltsRel = ltsRelations.relationFor(ltsPath).getOrElse(return None)
-    val lts: Map[String, Attribute] = ltsRel.output.map(a => a.name -> a).toMap
-    if (!Seq("bucket", "sum_value", "n").forall(lts.contains)) return None
-    val rawName: Map[ExprId, String] = lr.output.map(a => a.exprId -> a.name).toMap
-    var ok = true
-    def fail(): Expression = { ok = false; Literal(null) }
-
-    def isRawAttr(e: Expression, name: String): Boolean = e match {
-      case a: AttributeReference => rawName.get(a.exprId).contains(name)
-      case _ => false
-    }
-
+  protected def buildRewrite(agg: Aggregate, lr: LogicalRelation,
+      lts: Map[String, Attribute], ltsPath: String)
+      : Option[(Seq[Expression], Seq[NamedExpression])] = {
+    def isRawAttr(e: Expression, name: String) =
+      RouteSupport.rawColumn(lr, e).contains(name)
     // the rollup accumulated per-row casts at exactly this type; a sum over
     // a different scale/precision rounds per ROW on raw but per TOTAL when
     // re-aggregated, so only the matching cast is re-aggregable
-    val rollupSumOk: DecimalType => Boolean = cast =>
-      lts("sum_value").dataType == DecimalType(
-        math.min(DecimalType.MAX_PRECISION, cast.precision + 10), cast.scale)
-
-    def rw(e: Expression): Expression = e match {
-      case ae: AggregateExpression if !ae.isDistinct && ae.filter.isEmpty =>
-        ae.aggregateFunction match {
-          // sum(cast(value as decimal(p,s))) → cast(sum(sum_value), original)
-          case s: Sum => s.child match {
-            case c: Cast if isRawAttr(c.child, "value") &&
-                (c.dataType match {
-                  case d: DecimalType => rollupSumOk(d)
-                  case _ => false
-                }) =>
-              Cast(ae.copy(aggregateFunction =
-                s.withNewChildren(Seq(lts("sum_value"))).asInstanceOf[Sum]), ae.dataType)
-            case _ => fail()
-          }
-          // count(*) / count(lit) → sum(n), zero-coalesced to keep the
-          // empty-relation global-aggregate answer identical; the literal
-          // must be non-null (count(NULL) is always 0, not the row count)
-          case c: Count if c.children.forall(ch => ch.foldable && ch.eval() != null) =>
-            Coalesce(Seq(
-              ae.copy(aggregateFunction = Sum(lts("n").asInstanceOf[Expression])),
-              Literal(0L)))
-          case _ => fail()
-        }
-      // any other aggregate shape (FILTER clause, DISTINCT, other functions)
-      // must kill the rewrite — falling through to the generic child-walk
-      // would rewrite its arguments and route it with wrong semantics
-      case _: AggregateExpression => fail()
-      case tt: TruncTimestamp =>
-        (tt.format, tt.timestamp) match {
-          case (Literal(f, StringType), t) if f != null &&
-              coarseUnits.contains(f.toString.toLowerCase) && isRawAttr(t, "time") =>
-            tt.withNewChildren(Seq(tt.format, lts("bucket")))
-          case _ => fail()
-        }
-      case a: AttributeReference =>
-        rawName.get(a.exprId).flatMap(lts.get).getOrElse(fail())
-      case _: Literal => e
-      case other if other.children.nonEmpty => other.mapChildren(rw)
-      case _ => fail()
-    }
-
-    val newGroupings = agg.groupingExpressions.map(rw)
-    val newAggExprs: Seq[NamedExpression] = agg.aggregateExpressions.map {
-      // top-level dimension attrs keep their exprId so parents stay bound
-      case a: AttributeReference =>
-        rawName.get(a.exprId).flatMap(lts.get) match {
-          case Some(m) => Alias(m, a.name)(exprId = a.exprId)
-          case None => ok = false; a
-        }
-      case al: Alias =>
-        Alias(rw(al.child), al.name)(exprId = al.exprId, qualifier = al.qualifier)
-      case other => rw(other) match {
-        case ne: NamedExpression => ne
-        case _ => ok = false; other
+    def rollupSumOk(e: Expression) = e match {
+      case c: Cast if isRawAttr(c.child, "value") => c.dataType match {
+        case d: DecimalType => lts("sum_value").dataType == DecimalType(
+          math.min(DecimalType.MAX_PRECISION, d.precision + 10), d.scale)
+        case _ => false
       }
+      case _ => false
     }
-    // belt-and-braces: no reference to the raw relation may survive
-    val leftover = (newGroupings ++ newAggExprs)
-      .flatMap(_.references).exists(lr.outputSet.contains)
-    if (ok && !leftover) Some(Aggregate(newGroupings, newAggExprs, ltsRel))
-    else None
+    reaggregate(agg, lr)(lts.get, {
+      case ae: AggregateExpression => ae.aggregateFunction match {
+        // sum(cast(value as decimal(p,s))) → cast(sum(sum_value), original)
+        case s: Sum if rollupSumOk(s.child) =>
+          Some(Cast(ae.copy(aggregateFunction =
+            s.withNewChildren(Seq(lts("sum_value"))).asInstanceOf[Sum]),
+            ae.dataType))
+        // count(*) / count(lit) → sum(n), zero-coalesced to keep the
+        // empty-relation global-aggregate answer identical; the literal
+        // must be non-null (count(NULL) is always 0, not the row count)
+        case c: Count if c.children.forall(ch => ch.foldable && ch.eval() != null) =>
+          Some(Coalesce(Seq(
+            ae.copy(aggregateFunction = Sum(lts("n").asInstanceOf[Expression])),
+            Literal(0L))))
+        case _ => None
+      }
+      case tt: TruncTimestamp => tt.format match {
+        case Literal(f, StringType) if f != null &&
+            coarseUnits.contains(f.toString.toLowerCase) &&
+            isRawAttr(tt.timestamp, "time") =>
+          Some(tt.withNewChildren(Seq(tt.format, lts("bucket"))))
+        case _ => None
+      }
+    })
   }
 }

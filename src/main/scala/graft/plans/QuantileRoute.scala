@@ -1,15 +1,13 @@
 package graft.plans
 
-import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import graft.functions.{QHistMergeStateAgg, QHistStateAgg}
 
-/** QUANTILE-PARTIAL materialized-view routing (r14) — [[KmvRoute]]'s
+/** QUANTILE-PARTIAL materialized-view routing — [[KmvRoute]]'s
   * sketch-routing pattern extended to rank statistics: the per-type
   * percentile panel (q_percentiles_approx) derives from per-(type, day)
   * EXACT value histograms ([[graft.functions.QHistStateAgg]]), and a
@@ -39,15 +37,14 @@ import graft.functions.{QHistMergeStateAgg, QHistStateAgg}
   * measure, extra aggregates, filters — leaves the plan untouched and
   * scans raw (the [[CorpusRoute]]/[[KmvRoute]] conservatism), and a
   * session whose timezone differs from the rollup's build zone declines
-  * (the day grain is a timezone-dependent cast — the r13-ADVICE
-  * KmvRoute rule, applied here from birth).
+  * (the day grain is a timezone-dependent cast, as for [[KmvRoute]]).
   */
-object QuantileRoute extends Rule[LogicalPlan] {
+object QuantileRoute extends RollupRoute[(String, String)]("day") {
 
-  /** raw events root path (fully qualified) → (rollup path, build
-    * timezone).
-    */
-  private val routes = TrieMap[String, (String, String)]()
+  /** A route's target: (rollup path, build timezone). */
+  protected def rollupPath(t: (String, String)): String = t._1
+  protected def buildZone(t: (String, String)): Option[String] = Some(t._2)
+  protected val requiredColumns: Seq[String] = Seq("event_type", "day", "state")
 
   /** The maintained rollup: one row per (event_type, day) holding the
     * EXACT value histogram of that day's readings — the same partial
@@ -63,14 +60,14 @@ object QuantileRoute extends Rule[LogicalPlan] {
   }
 
   /** Incremental maintenance for an APPEND batch — the BATCH-caller
-    * entry, crash-exact end to end (r15; this retired the r14 CRASH
-    * CAVEAT): the batch's per-(type, day) states land as ledger-tagged
-    * blind segment files by staged write + per-file rename (the
-    * [[appendRollup]] machinery — no read of existing state, no delete
-    * of live state at ANY crash point), auto-compacted past
+    * entry, crash-exact end to end: the batch's per-(type, day) states
+    * land as ledger-tagged blind segment files by staged write +
+    * per-file rename (the [[appendRollup]] machinery — no read of
+    * existing state, no delete of live state at ANY crash point),
+    * auto-compacted past
     * `maxSegments` by the day-local entry, and the route's re-merge
     * aggregate folds segments back to one state per group at read
-    * (bit-identical to the old read-merge-overwrite by the histogram
+    * (bit-identical to a read-merge-overwrite by the histogram
     * monoid). The NULL day appends like any other touched day.
     *
     * Replay protection for AT-LEAST-ONCE callers rides the batch
@@ -87,14 +84,9 @@ object QuantileRoute extends Rule[LogicalPlan] {
     */
   def upsertRollup(spark: SparkSession, rollupPath: String,
       newEvents: DataFrame, batchTag: Option[(String, String)] = None,
-      maxSegments: Int = 8): Unit = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
-    RouteSupport.requireWriteZone(spark, rollupPath, "quantile rollup")
-    RouteSupport.ledgeredUpsert(rollupPath, "day", batchTag, maxSegments,
-      rollupOf(newEvents),
-      owner => compactDays(spark, rollupPath, maxSegments, Some(owner)),
-      () => invalidate(rollupPath))
-  }
+      maxSegments: Int = 8): Unit =
+    upsert(spark, rollupPath, batchTag, maxSegments, rollupOf(newEvents))(
+      remerge)
 
   /** BLIND tagged-segment append — the maintenance entry a STREAMING
     * maintainer runs per micro-batch ([[graft.streaming.RollupStream]]):
@@ -115,28 +107,23 @@ object QuantileRoute extends Rule[LogicalPlan] {
       appendTag: Option[(String, String)] = None): Unit = {
     require(new java.io.File(rollupPath).isDirectory,
       s"appendRollup on $rollupPath with no rollup — build it first")
-    RouteSupport.requireWriteZone(spark, rollupPath, "quantile rollup")
-    RouteSupport.taggedAppend(rollupPath, "day", appendTag, Int.MaxValue,
-      rollupOf(newEvents), _ => (), () => invalidate(rollupPath))
+    append(spark, rollupPath, appendTag, Int.MaxValue, rollupOf(newEvents))(
+      remerge)
   }
 
   /** The per-batch STREAMING maintenance entry
     * ([[graft.streaming.RollupStream.qhistAppendStream]]): delete-own-tag
     * → day-local compaction → tagged blind append, IN THAT ORDER — the
-    * ordering ([[RouteSupport.taggedAppend]]) is what keeps the
+    * ordering ([[RollupRoute.publish]]) is what keeps the
     * crash-replay of the CURRENT batch exact with auto-compaction on
     * (the TextIndex postings contract: "maintainers must not replay
     * batches older than their last compaction").
     */
   def maintainRollup(spark: SparkSession, rollupPath: String,
       newEvents: DataFrame, tag: (String, String),
-      maxSegments: Int = 8): Unit = {
-    RouteSupport.requireWriteZone(spark, rollupPath, "quantile rollup")
-    RouteSupport.taggedAppend(rollupPath, "day", Some(tag), maxSegments,
-      rollupOf(newEvents),
-      owner => compactDays(spark, rollupPath, maxSegments, Some(owner)),
-      () => invalidate(rollupPath))
-  }
+      maxSegments: Int = 8): Unit =
+    append(spark, rollupPath, Some(tag), maxSegments, rollupOf(newEvents))(
+      remerge)
 
   /** DAY-LOCAL segment compaction — the family-standard read-economy
     * restorer: every day dir past `maxSegments` files is re-merged to
@@ -145,23 +132,15 @@ object QuantileRoute extends Rule[LogicalPlan] {
     * swapped in atomically through the shared crash protocol.
     */
   def compactDays(spark: SparkSession, rollupPath: String,
-      maxSegments: Int = 1, owner: Option[String] = None): Unit = {
+      maxSegments: Int = 1, owner: Option[String] = None): Unit =
+    compact(spark, rollupPath, maxSegments, owner)(remerge)
+
+  private def remerge(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    graft.functions.VectorFunctions.ensureRegistered(spark)
-    // standalone ad-hoc compaction leases scoped (unique owner); a call
-    // on a stream's behalf (owner = Some(streamId)) keeps that
-    // stream's lease standing
-    val (id, sticky) = graft.operators.Artifacts.leaseFor(owner)
-    graft.operators.Artifacts.withLease(rollupPath, id, sticky) {
-      RouteSupport.compactPartitions(spark, rollupPath, "day", maxSegments)(
-        _.groupBy("event_type", "day")
-          .agg(graft.functions.VectorFunctions.qhistMergeState(col("state"))
-            .as("state")))
-      invalidate(rollupPath)
-    }
-    // (unmarked ledgered batch segments ride through unfolded — the
-    // [[graft.operators.Artifacts.foldableFile]] gate inside the shared
-    // compaction — so a delayed batch replay still finds its own files)
+    graft.functions.VectorFunctions.ensureRegistered(df.sparkSession)
+    df.groupBy("event_type", "day")
+      .agg(graft.functions.VectorFunctions.qhistMergeState(col("state"))
+        .as("state"))
   }
 
   /** Heal a crashed day-dir swap and sweep crashed staged-append trees
@@ -170,19 +149,9 @@ object QuantileRoute extends Rule[LogicalPlan] {
   def recoverRollup(rollupPath: String): Unit =
     RouteSupport.recoverRollup(rollupPath, "day")
 
-  /** MAX parquet file count across day dirs — the segment proxy a
-    * continuous maintainer bounds.
-    */
-  private[graft] def rollupSegments(rollupPath: String): Int =
-    RouteSupport.foldableSegments(rollupPath, "day")
-
   def register(spark: SparkSession, rawPath: String,
       rollupPath: String): Unit =
-    routes.put(RouteSupport.canon(spark, rawPath),
-      (rollupPath, RouteSupport.sessionZone(spark))): Unit
-
-  def deregister(spark: SparkSession, rawPath: String): Unit =
-    routes.remove(RouteSupport.canon(spark, rawPath)): Unit
+    addRoute(spark, rawPath, (rollupPath, RouteSupport.sessionZone(spark)))
 
   /** Build (once per dataset fingerprint × session zone, at ingest) the
     * per-(type, day) histogram rollup, register raw→rollup, and enable
@@ -195,74 +164,15 @@ object QuantileRoute extends Rule[LogicalPlan] {
       rollupOf(graft.Tables.events(spark, dir)).coalesce(1)
         .write.partitionBy("day").parquet(s"$tmp/rollup")
     }
-    this.synchronized {
-      if (!existed) invalidate(roll)
-      enable(spark)
-      register(spark, s"$dir/events.parquet", roll)
-    }
+    install(spark, roll, rebuilt = !existed)(
+      register(spark, s"$dir/events.parquet", roll))
     roll
   }
 
-  /** Loud engagement check — a declared routed query must FAIL if the
-    * optimizer stopped serving it from the rollup.
-    */
-  def requireEngaged(df: DataFrame, rollupPath: String): Unit = {
-    val engaged = df.queryExecution.optimizedPlan.collect {
-      case lr: LogicalRelation => lr.relation match {
-        case h: HadoopFsRelation =>
-          h.location.rootPaths.exists(_.toString.contains(rollupPath))
-        case _ => false
-      }
-    }.exists(identity)
-    require(engaged, s"quantile route failed to engage for $rollupPath:\n" +
-      df.queryExecution.optimizedPlan)
-  }
-
-  /** Idempotently attach the rule to a live session. */
-  def enable(spark: SparkSession): Unit = this.synchronized {
-    if (!spark.experimental.extraOptimizations.exists(_ eq this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
-
-  // resolved-once rollup relations (shared scaffold)
-  private val rollupRelations = new RouteSupport.RelationCache("day")
-
-  def invalidate(rollupPath: String): Unit =
-    rollupRelations.invalidate(rollupPath)
-
-  private def routeFor(lr: LogicalRelation): Option[(String, String)] =
-    lr.relation match {
-      case h: HadoopFsRelation if h.location.rootPaths.size == 1 =>
-        routes.get(h.location.rootPaths.head.toString)
-      case _ => None
-    }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case agg: Aggregate => rewrite(agg).getOrElse(agg)
-  }
-
-  /** Same Project-inlining dance as [[KmvRoute.rewrite]] (the shared
-    * [[RouteSupport.inlineProject]] preamble). */
-  private def rewrite(agg: Aggregate): Option[LogicalPlan] = agg.child match {
-    case lr: LogicalRelation =>
-      routeFor(lr).flatMap { case (p, z) => buildRewrite(agg, lr, p, z) }
-    case Project(projList, lr: LogicalRelation) =>
-      routeFor(lr).flatMap { case (p, z) =>
-        buildRewrite(RouteSupport.inlineProject(agg, projList, lr), lr, p, z) }
-    case _ => None
-  }
-
-  private def buildRewrite(agg: Aggregate, lr: LogicalRelation,
-      rollupPath: String, buildZone: String): Option[LogicalPlan] = {
-    // a foreign-zone session's to_date grain is a DIFFERENT grouping
-    // than the stored day buckets — the raw scan is its correct answer
-    if (conf.sessionLocalTimeZone != buildZone) return None
-    val rollRel = rollupRelations.relationFor(rollupPath).getOrElse(return None)
-    val roll: Map[String, Attribute] = rollRel.output.map(a => a.name -> a).toMap
-    if (!Seq("event_type", "day", "state").forall(roll.contains)) return None
-    val m = RouteSupport.TsMatchers(
-      lr.output.map(a => a.exprId -> a.name).toMap, buildZone)
+  protected def buildRewrite(agg: Aggregate, lr: LogicalRelation,
+      roll: Map[String, Attribute], t: (String, String))
+      : Option[(Seq[Expression], Seq[NamedExpression])] = {
+    val m = RouteSupport.TsMatchers(lr, t._2)
     import m.{isRawAttr, isDayOfTs}
 
     def isTypeAttr(e: Expression): Boolean = e match {
@@ -292,7 +202,7 @@ object QuantileRoute extends Rule[LogicalPlan] {
           ae.aggregateFunction match {
             // gridBits == 0 only: the rollup stores grid-FREE states,
             // and a grid-g query groups values into coarser cells — a
-            // different statistic the rollup cannot answer (r15)
+            // different statistic the rollup cannot answer
             case st: QHistStateAgg
                 if st.gridBits == 0 && isRawAttr(st.child, "value") =>
               // the group's state is the MERGE of its stored segment
@@ -313,10 +223,6 @@ object QuantileRoute extends Rule[LogicalPlan] {
       }
       case other => ok = false; other
     }
-    val leftover = newProj
-      .flatMap(_.references).exists(lr.outputSet.contains)
-    if (ok && !leftover)
-      Some(Aggregate(Seq(roll("event_type"), roll("day")), newProj, rollRel))
-    else None
+    if (ok) Some((Seq(roll("event_type"), roll("day")), newProj)) else None
   }
 }

@@ -1,21 +1,14 @@
 package graft.plans
 
-import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types.{DateType, IntegerType, LongType, TimestampType}
 
-/** Scaffolding shared by the routing rules — extracted (r14 review
-  * pass) because the r13-ADVICE timezone fixes had to be
-  * hand-replicated between them: the zone discipline, the
-  * normalized-ts/day-grain plan matchers, the resolved-once
-  * rollup-relation cache, the Project-inlining rewrite preamble and the
-  * tagged-segment maintenance protocol every maintained rollup
-  * ([[KmvRoute]], [[QuantileRoute]], [[CorpusRoute]], [[LtsRoute]])
-  * appends through are ONE audited implementation, so the next matcher,
-  * zone or protocol fix cannot silently miss a route.
+/** The zone discipline, the normalized-ts/day-grain plan matchers and
+  * the segment-file steps (staged publish, compaction, crash recovery)
+  * of every maintained rollup — one implementation, so a matcher, zone
+  * or protocol fix cannot miss a route. [[RollupRoute]] runs them.
   */
 private[plans] object RouteSupport {
 
@@ -28,8 +21,8 @@ private[plans] object RouteSupport {
       .makeQualified(hp).toString
   }
 
-  /** The incremental-WRITE zone gate (review-found, r14): an upsert's
-    * `to_date(ts)` grain runs under the CURRENT session zone, so a
+  /** The incremental-WRITE zone gate: an upsert's `to_date(ts)` grain
+    * runs under the CURRENT session zone, so a
     * maintainer session whose zone differs from the rollup's build
     * zone would fold delta states into FOREIGN day buckets — silently
     * corrupting the states the route serves as build-zone answers,
@@ -54,75 +47,23 @@ private[plans] object RouteSupport {
       }
   }
 
-  /** Resolved-once rollup relations, per route (the LtsRoute
-    * ltsRelations rationale: resolving inside the optimizer re-enters
-    * analysis — do it once, refresh on invalidate after maintenance
-    * rewrites the files).
-    *
-    * Residue discipline (r14 review): a FRESH resolution during a
-    * compaction's aside-rename window would list a `partCol=X.old-…`
-    * dir — partition discovery either drops day X silently or infers
-    * the aside's name as a string partition value — so a cache MISS
-    * first checks [[settledResidue]] and DECLINES (None → the route
-    * stays raw, which is always correct) while residue persists. A
-    * cache HIT resolved against a healthy listing; if a swap lands
-    * between resolution and execution the read fails LOUDLY
-    * (missing-file), never silently — and the maintainer's own
-    * invalidate-after-swap re-resolves the next query.
-    */
-  final class RelationCache(partCol: String) {
-    private val cache = TrieMap[String, LogicalRelation]()
-
-    def invalidate(path: String): Unit = cache.remove(path): Unit
-
-    def relationFor(path: String): Option[LogicalRelation] =
-      cache.get(path).orElse {
-        if (settledResidue(path, partCol).nonEmpty) None
-        else {
-          val rel = SparkSession.active.read.parquet(path)
-            .queryExecution.analyzed
-            .collectFirst { case l: LogicalRelation => l }
-          rel.foreach(cache.put(path, _))
-          rel
-        }
-      }.map(_.newInstance())
-  }
-
-  /** The Project-inlining preamble every route's rewrite runs: the
-    * optimizer pulls complex groupings into a child Project, so aliases
-    * inline back before shape-matching against the raw columns. Returns
-    * the aggregate re-rooted directly on the relation.
-    */
-  def inlineProject(agg: Aggregate, projList: Seq[NamedExpression],
-      lr: LogicalRelation): Aggregate = {
-    val aliasOf = projList.collect {
-      case al: Alias => al.toAttribute.exprId -> al.child
-    }.toMap
-    def inline(e: Expression): Expression = e.transformUp {
-      case a: AttributeReference if aliasOf.contains(a.exprId) =>
-        aliasOf(a.exprId)
+  /** The raw relation column `e` references directly, by name. */
+  def rawColumn(lr: LogicalRelation, e: Expression): Option[String] =
+    e match {
+      case a: AttributeReference =>
+        lr.output.find(_.exprId == a.exprId).map(_.name)
+      case _ => None
     }
-    Aggregate(
-      agg.groupingExpressions.map(inline),
-      agg.aggregateExpressions.map(ne => inline(ne) match {
-        case n: NamedExpression => n
-        case other => Alias(other, ne.name)(exprId = ne.exprId)
-      }),
-      lr)
-  }
 
   /** Zone-aware matchers over the normalized events schema — the ONE
     * definition of "this expression is the normalized event timestamp"
-    * and "this is its day grain" (previously two verbatim copies the
-    * r13-ADVICE timeZoneId fixes had to chase into each).
+    * and "this is its day grain", so a cast's zone is checked the same
+    * way by every day-grain route.
     */
-  final case class TsMatchers(rawName: Map[ExprId, String],
-      buildZone: String) {
+  final case class TsMatchers(lr: LogicalRelation, buildZone: String) {
 
-    def isRawAttr(e: Expression, name: String): Boolean = e match {
-      case a: AttributeReference => rawName.get(a.exprId).contains(name)
-      case _ => false
-    }
+    def isRawAttr(e: Expression, name: String): Boolean =
+      rawColumn(lr, e).contains(name)
 
     /** The normalized event timestamp in every generation Tables.events
       * produces: a plain ts attribute (timestamp files), cast-from-NTZ,
@@ -192,11 +133,10 @@ private[plans] object RouteSupport {
     // the work list counts only FOLDABLE files: a dir overweight
     // purely from carried (unmarked segb-) orphans is left alone —
     // rewriting it would converge nothing and repeat forever
-    // (review-found, r15)
     val dirs = Artifacts.overweightFoldableDirs(rollupPath, s"$partCol=",
       maxSegments)
     if (dirs.isEmpty) return
-    // the batch-ledger fold gate (r15): an UNMARKED `segb-` segment —
+    // the batch-ledger fold gate: an UNMARKED `segb-` segment —
     // a ledgered batch append that crashed before its commit marker —
     // must not fold untagged (its caller will replay by delete-own-tag,
     // which only matches files still CARRYING the tag); it rides
@@ -209,7 +149,7 @@ private[plans] object RouteSupport {
     if (fold.isEmpty) return // cannot happen given the work list; belt
     val stage = s"$rollupPath/.tmp-stage-${java.util.UUID.randomUUID()}"
     merge(spark.read.option("basePath", rollupPath)
-      .parquet(fold.map(_.getPath): _*))
+      .parquet(fold.map(_.getPath).toSeq: _*))
       .coalesce(1)
       .write.partitionBy(partCol).parquet(stage)
     for (f <- carry) {
@@ -221,88 +161,11 @@ private[plans] object RouteSupport {
     Artifacts.swapStagedDirs(spark, stage, dirs.toSeq)
   }
 
-  /** MAX FOLDABLE parquet file count across a rollup's partition dirs —
-    * the segment proxy every route's maintenance triggers bound
-    * (carried unmarked-ledger orphans deliberately excluded; see
-    * [[graft.operators.Artifacts.maxFoldableSegmentsIn]]).
-    */
-  def foldableSegments(rollupPath: String, partCol: String): Int =
-    graft.operators.Artifacts.maxFoldableSegmentsIn(rollupPath,
-      s"$partCol=")
-
-  /** The ONE tagged-segment maintenance body every route's append
-    * entry runs, so an ordering or crash-window fix cannot miss a
-    * route: under the maintenance lease — recover, skip a `committed`
-    * re-delivery, delete-own-tag, compact past the foldable bound (as
-    * the same lease owner), blind tagged staged publish, `commit`,
-    * invalidate. Routes differ only in partition column, delta
-    * construction and compactor — passed in.
-    *
-    * Delete-own-tag runs BEFORE the compaction: compaction folds
-    * tagged segments into untagged files, so it must only ever fold
-    * committed batches' tags. Structured Streaming replays only the
-    * last uncommitted batch, so a replay entering here removes its own
-    * crashed residue first and the compaction then folds only earlier
-    * tags; compacting after the append would fold the current batch's
-    * own tag before its commit, and a crash there would re-append it.
-    */
-  private def publishSegment(rollupPath: String, partCol: String,
-      tag: Option[(String, String)], prefix: String, maxSegments: Int,
-      delta: => DataFrame, compact: String => Unit, invalidate: () => Unit,
-      committed: => Boolean, commit: => Unit): Unit = {
-    import graft.operators.Artifacts
-    val (owner, sticky) = Artifacts.leaseIdentity(tag)
-    Artifacts.withLease(rollupPath, owner, sticky) {
-      recoverRollup(rollupPath, partCol)
-      if (!committed) {
-        if (tag.isDefined)
-          Artifacts.deleteTaggedFiles(rollupPath, s"$partCol=", prefix)
-        if (foldableSegments(rollupPath, partCol) > maxSegments)
-          compact(owner)
-        stagePublish(rollupPath, delta, partCol, prefix)
-        commit
-        invalidate()
-      }
-    }
-  }
-
-  /** The streaming / exactly-once append: `tag` = (streamId, batchId)
-    * makes a replay of the last uncommitted batch overwrite its own
-    * segment files (the `seg-` namespace, foldable at once); an
-    * untagged call publishes under a unique adhoc tag and needs an
-    * exactly-once caller (or a multiplicity-invariant state).
-    */
-  def taggedAppend(rollupPath: String, partCol: String,
-      tag: Option[(String, String)], maxSegments: Int, delta: => DataFrame,
-      compact: String => Unit, invalidate: () => Unit): Unit =
-    publishSegment(rollupPath, partCol, tag,
-      graft.operators.Artifacts.segPrefix(tag), maxSegments, delta, compact,
-      invalidate, committed = false, commit = ())
-
-  /** The batch-ledgered upsert for AT-LEAST-ONCE batch callers: a
-    * MARKED re-delivery is skipped, an unmarked one overwrites its own
-    * `segb-` files and marks the tag committed
-    * ([[graft.operators.Artifacts.ledgerPrefix]]).
-    */
-  def ledgeredUpsert(rollupPath: String, partCol: String,
-      batchTag: Option[(String, String)], maxSegments: Int,
-      delta: => DataFrame, compact: String => Unit,
-      invalidate: () => Unit): Unit = {
-    import graft.operators.Artifacts
-    require(new java.io.File(rollupPath).isDirectory,
-      s"upsertRollup on $rollupPath with no rollup — build it first")
-    publishSegment(rollupPath, partCol, batchTag,
-      batchTag.map(Artifacts.ledgerPrefix).getOrElse(Artifacts.segPrefix(None)),
-      maxSegments, delta, compact, invalidate,
-      committed = batchTag.exists(Artifacts.isCommitted(rollupPath, _)),
-      commit = batchTag.foreach(Artifacts.markCommitted(rollupPath, _)))
-  }
-
   /** Heal a maintained rollup at maintenance entry: complete or roll
     * back crashed partition-dir swaps, and sweep crashed staged-append
     * trees (`.tmp-stage-*` — dot-prefixed, so a live reader never saw
     * them; without the sweep a long-running maintainer that crashes
-    * mid-batch leaks one orphan tree per crash — r14 review).
+    * mid-batch leaks one orphan tree per crash).
     */
   def recoverRollup(rollupPath: String, partCol: String): Unit = {
     import graft.operators.Artifacts

@@ -261,22 +261,4 @@ object VectorStream {
           onMaintain(batchId, ratio, refit)
         }
     }
-
-  /** [[trainedIvfMaintainerStream]] at the PQ family — quantized
-    * batches probed per slice, composed-codebook refit past the bound.
-    */
-  def trainedPqMaintainerStream(embQ: DataFrame, modelRoot: String,
-      fullQ: () => DataFrame, subs: Int, codes: Int, iters: Int,
-      gen: String,
-      onMaintain: (Long, Double, Boolean) => Unit = (_, _, _) => ())
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    embQ.writeStream.outputMode("append").foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val (ratio, refit) = graft.operators.TrainedAnn.maintainPqBatch(
-            modelRoot, batch.toDF(), fullQ(), subs, codes, iters,
-            s"$gen-b$batchId")
-          onMaintain(batchId, ratio, refit)
-        }
-    }
 }

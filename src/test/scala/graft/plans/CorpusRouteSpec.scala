@@ -44,6 +44,24 @@ class CorpusRouteSpec extends AnyFunSuite {
     try f finally CorpusRoute.deregister(spark, rawPath)
   }
 
+  test("the shared engagement check and enable: a deregistered route " +
+      "fails loudly naming its rollup, and enable installs each route once") {
+    CorpusRoute.enable(spark)
+    CorpusRoute.deregister(spark, rawPath)
+    val e = intercept[IllegalArgumentException] {
+      CorpusRoute.requireEngaged(TextOps.textStats(spark, base), rollupPath)
+    }
+    assert(e.getMessage.contains(rollupPath), e.getMessage)
+    val routes: Seq[RollupRoute[_]] =
+      Seq(LtsRoute, CorpusRoute, KmvRoute, QuantileRoute)
+    for (r <- routes) {
+      r.enable(spark)
+      r.enable(spark)
+      assert(spark.experimental.extraOptimizations.count(_ eq r) == 1,
+        r.ruleName)
+    }
+  }
+
   test("the engine's own textStats query routes to the rollup, bit-identical") {
     def q = TextOps.textStats(spark, base)
     val baseline = rows(q) // route not registered yet
@@ -194,6 +212,23 @@ class CorpusRouteSpec extends AnyFunSuite {
         .select(cols.map(col): _*))
       == rows(CorpusRoute.rollupOf(now).select(cols.map(col): _*)),
       "healed rollup must hold exactly the pre-crash + batch partials")
+  }
+
+  test("untagged upserts past the segment bound compact their lang dir " +
+      "instead of refusing") {
+    import spark.implicits._
+    def docs(texts: String*) =
+      texts.map(t => ("en", "web", t, t.length.toLong))
+        .toDF("lang", "source", "text", "n_chars")
+    val roll = Files.createTempDirectory("graft_route_untagged").toString +
+      "/rollup"
+    CorpusRoute.rollupOf(docs("a b")).write.partitionBy("lang").parquet(roll)
+    // the second upsert finds two segments past the bound of one and
+    // compacts inside its own unique-owner lease
+    CorpusRoute.upsertRollup(spark, roll, docs("c d e"), maxSegments = 1)
+    CorpusRoute.upsertRollup(spark, roll, docs("f"), maxSegments = 1)
+    assert(rows(CorpusRoute.remerge(spark.read.parquet(roll))) ==
+      rows(CorpusRoute.rollupOf(docs("a b", "c d e", "f"))))
   }
 
   test("incremental upsert: batch langs' partitions gain a segment, others untouched, routed results track") {
